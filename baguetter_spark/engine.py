@@ -27,7 +27,7 @@ class BM25SparkIndex:
     Unlike the reference's in-memory dicts, state lives in DataFrames; like
     the reference, every add/remove triggers a full rebuild
     (`baguetter/indices/sparse/base.py:244-256` — rebuild-on-add semantics),
-    which at scale maps to segment + merge jobs (see merge.py).
+    which at scale maps to one reindex over decoded postings (see merge.py).
     """
 
     def __init__(
@@ -82,7 +82,7 @@ class BM25SparkIndex:
             # (``key:0``).  Replacement covers the WHOLE conversation
             # (reference ``corpus[key] = value`` replaces the entire
             # document): drop every existing turn of each key first —
-            # the segment's collision pass alone would replace only
+            # the add's same-doc_id replacement alone would replace only
             # ``key:0`` and leave stale turns 1..n of a multi-turn
             # conversation searchable, disagreeing with remove_many's
             # bare-key = whole-conversation resolution.
@@ -99,9 +99,9 @@ class BM25SparkIndex:
         )
         return self._rebuild()
 
-    # Above this many colliding doc ids, add_transcripts switches from the
-    # driver-broadcast remove_docs to the fully distributed remove_docs_df
-    # (nothing about the removed set ever touches the driver).
+    # Above this many replaced turns, add_transcripts ranks the survivors
+    # through zip_with_index instead of a driver-broadcast doc_idx list
+    # (nothing about the replaced set then ever touches the driver).
     DRIVER_KEY_BOUND = 100_000
 
     def add_transcripts(
@@ -109,18 +109,22 @@ class BM25SparkIndex:
     ) -> BM25SparkIndex:
         """DataFrame-scale incremental add with the list API's replace
         semantics (reference add_many = corpus-dict update + full rebuild,
-        base.py:324-356): build a segment over the new transcripts only,
-        drop any existing docs whose keys collide (they are being
-        replaced), and merge — no re-tokenization of the existing corpus.
+        base.py:324-356), as ONE reindex pass (merge.add_docs): only the new
+        transcripts are tokenized, the existing index is decoded once from
+        its posting blocks minus the turns the batch replaces (same
+        doc_id), and the union runs through the build's post-tokenize tail
+        — global stats, vocabulary, impacts and posting blocks are exactly
+        a rebuild's.
 
-        The collision set stays DISTRIBUTED: its size is a count(), and
-        when it exceeds ``driver_key_bound`` (default DRIVER_KEY_BOUND) the
-        removal runs through merge.remove_docs_df, so re-ingesting a
-        corrected 10^8-doc partition never materializes 10^8 keys on the
-        driver.  Calling this switches the engine out of list-API mode:
-        the driver corpus (if any) is dropped, doc ids are exposed
-        verbatim from then on (``synthetic_turn_suffix`` -> False), and
-        the superseded index's cached frames are released.
+        The replaced set stays bounded on the driver: one probe returns at
+        most ``driver_key_bound`` (default DRIVER_KEY_BOUND) + 1 doc ids,
+        and a larger set renumbers the survivors through zip_with_index, so
+        re-ingesting a corrected 10^8-doc partition never materializes
+        10^8 ids on the driver.  Calling this switches the engine out of
+        list-API mode: the driver corpus (if any) is dropped, doc ids are
+        exposed verbatim from then on (``synthetic_turn_suffix`` -> False),
+        and the superseded index's cached frames are released.  A failure
+        leaves the engine exactly as it was.
 
         Documented divergence shared with this engine's list-API add_many:
         replaced docs take NEW doc_idx positions (insertion order = append)
@@ -128,57 +132,18 @@ class BM25SparkIndex:
         against a replaced doc may break differently than the reference's
         in-place dict update.  Scores and result sets are unaffected.
         """
-        from baguetter_spark.merge import (
-            merge_indexes,
-            release_index,
-            remove_docs,
-            remove_docs_df,
-            truncate_lineage,
-        )
+        from baguetter_spark.merge import add_docs, release_index
 
-        bound = self.DRIVER_KEY_BOUND if driver_key_bound is None else driver_key_bound
-        seg = build_index(self.spark, transcripts, self.config)
-        # State transitions happen only on SUCCESS: a mid-operation failure
-        # (overlap count, merge, checkpoint) must leave the engine exactly
-        # as it was — self.index untouched, list-API mode intact — and must
-        # not leak the segment's pinned frames.
-        base = old = self.index
-        try:
-            if self.index is None:
-                self.index = seg
-                self._corpus = None  # leave list-API mode (see docstring)
-                return self
-            overlap_keys = seg.doc_map.select("doc_id").join(
-                old.doc_map.select("doc_id"), "doc_id", "left_semi"
+        old = self.index
+        if old is None:
+            self.index = build_index(self.spark, transcripts, self.config)
+        else:
+            bound = self.DRIVER_KEY_BOUND if driver_key_bound is None else driver_key_bound
+            self.index = add_docs(
+                self.spark, old, transcripts, self.config, driver_key_bound=bound
             )
-            n_overlap = overlap_keys.count()
-            if n_overlap >= old.n_docs:  # batch replaces everything
-                self.index = seg
-                self._corpus = None
-                release_index(old)
-                return self
-            if 0 < n_overlap <= bound:
-                keys = [r["doc_id"] for r in overlap_keys.collect()]
-                base = remove_docs(self.spark, old, keys)
-            elif n_overlap > bound:
-                base = remove_docs_df(self.spark, old, overlap_keys)
-            # checkpoint: without cutting lineage here, a loop of incremental
-            # adds stacks decode+merge subtrees until the driver OOMs on the
-            # plan itself (see merge.truncate_lineage)
-            self.index = truncate_lineage(
-                merge_indexes(self.spark, [base, seg], self.config)
-            )
-            self._corpus = None
-        except BaseException:
-            release_index(seg)
-            if base is not old:
-                release_index(base)
-            raise
-        # the checkpoint has materialized: every superseded frame is garbage
-        if base is not old:
-            release_index(base)
-        release_index(seg)
-        release_index(old)
+        self._corpus = None  # leave list-API mode (see docstring)
+        release_index(old)  # the new index has materialized: old is garbage
         return self
 
     def tokenize(self, text: str) -> list[str]:

@@ -235,10 +235,11 @@ def merge_equals_rebuild_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def incremental_add_digest_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-level incremental ingestion: ``build`` on the first slice of
-    the corpus, then TWO chained ``add_transcripts`` batches (each builds a
-    segment over only the new docs and merges — no re-tokenization, with
-    lineage truncated between rounds) must leave an index digest-identical
-    to the full-corpus build oracle.  Chaining two adds is the point: it
+    the corpus, then TWO chained ``add_transcripts`` batches (each tokenizes
+    only the new docs and reindexes them with the decoded postings — no
+    re-tokenization, with lineage truncated between rounds) must leave an
+    index digest-identical to the full-corpus build oracle.  Chaining two
+    adds is the point: it
     exercises the maintenance-over-maintenance plan that used to blow up
     driver memory before ``merge.truncate_lineage``.  The replace-on-
     collision path is pytest-verified instead (replaced docs re-append, so

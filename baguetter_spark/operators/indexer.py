@@ -629,35 +629,72 @@ def build_index(
 
         n_docs = layout.n_rows
         keys = presorted_keys(transcripts, layout)
-        tf = presorted_local_tf(transcripts, layout, config).persist()
+        tf = presorted_local_tf(transcripts, layout, config)
     else:
-        # shuffle_hash: without the hint this compiles to a sort-merge join
-        # that fully SORTS the text side by its string key — pure overhead,
-        # since the text only needs to MEET its doc_idx, not be ordered by
-        # conv_id.  SHJ shuffles both sides (the text moves exactly once
-        # either way) and builds the hash table on the narrow key side.
-        keys_frame = docs_from_transcripts(transcripts).select(
-            "conv_id", "turn_idx", "doc_id"
-        )
-        keys_full, kstats = zip_with_index(
-            keys_frame, ["conv_id", "turn_idx"], "doc_idx", extra_sums={}, cleanup=pins
-        )
-        n_docs = kstats["count"]
-        keys = keys_full.select("doc_idx", "doc_id")
-        docs = (
-            docs_from_transcripts(transcripts)
-            .select("conv_id", "turn_idx", "text")
-            .join(
-                keys_full.select("conv_id", "turn_idx", "doc_idx").hint("shuffle_hash"),
-                ["conv_id", "turn_idx"],
-            )
-            .select("doc_idx", "text")
-        )
-        # tf is the one heavy intermediate; per-doc counting is fused into
-        # the tokenizer's Arrow pass (no token-level shuffle — the corpus
-        # crosses the Python boundary once, already aggregated)
-        tf = local_term_frequencies(docs, config).persist()
+        keys, tf, n_docs = keyed_term_frequencies(transcripts, config, pins)
+    return index_from_term_frequencies(tf, doc_map_from(keys, tf), n_docs, config, pins)
 
+
+def doc_map_from(keys: DataFrame, tf: DataFrame) -> DataFrame:
+    """keys (doc_idx, doc_id) + tf rows -> doc_map (doc_idx, doc_id,
+    doc_len): doc_len = sum(tf) per doc (== token count); empty docs get 0.
+    Built from the NARROW key frame — no second pass over the text; lazy
+    (materialized by the first search/save, not on the build critical
+    path)."""
+    doc_lens = tf.groupBy("doc_idx").agg(F.sum("tf").cast("int").alias("doc_len"))
+    return keys.join(doc_lens, "doc_idx", "left").fillna(0, subset=["doc_len"])
+
+
+def keyed_term_frequencies(
+    transcripts: DataFrame, config: SparseIndexConfig, pins: list, offset: int = 0
+) -> tuple[DataFrame, DataFrame, int]:
+    """transcripts -> (keys (doc_idx, doc_id), tf rows, n_docs): doc_idx =
+    ``offset`` + rank of (conv_id, turn_idx), the general (shuffle) path of
+    build_index.  ``offset`` places a batch after the docs of an existing
+    index (merge.add_docs)."""
+    # shuffle_hash: without the hint this compiles to a sort-merge join
+    # that fully SORTS the text side by its string key — pure overhead,
+    # since the text only needs to MEET its doc_idx, not be ordered by
+    # conv_id.  SHJ shuffles both sides (the text moves exactly once
+    # either way) and builds the hash table on the narrow key side.
+    keys_frame = docs_from_transcripts(transcripts).select("conv_id", "turn_idx", "doc_id")
+    keys_full, kstats = zip_with_index(
+        keys_frame, ["conv_id", "turn_idx"], "doc_idx", extra_sums={}, cleanup=pins
+    )
+    doc_idx = (
+        (F.col("doc_idx") + F.lit(offset)).alias("doc_idx") if offset else F.col("doc_idx")
+    )
+    keys = keys_full.select(doc_idx, "doc_id")
+    docs = (
+        docs_from_transcripts(transcripts)
+        .select("conv_id", "turn_idx", "text")
+        .join(
+            keys_full.select("conv_id", "turn_idx", "doc_idx").hint("shuffle_hash"),
+            ["conv_id", "turn_idx"],
+        )
+        .select(doc_idx, "text")
+    )
+    # per-doc counting is fused into the tokenizer's Arrow pass (no
+    # token-level shuffle — the corpus crosses the Python boundary once,
+    # already aggregated)
+    return keys, local_term_frequencies(docs, config), kstats["count"]
+
+
+def index_from_term_frequencies(
+    tf: DataFrame,
+    doc_map: DataFrame,
+    n_docs: int,
+    config: SparseIndexConfig,
+    pins: list,
+) -> BM25Index:
+    """Everything after tokenization: tf rows (TF_BATCH_SCHEMA) + the
+    doc_map of all ``n_docs`` docs -> the index.  Shared by build_index and
+    the maintenance ops in merge.py, which feed it decoded posting rows
+    instead of tokenizer output.  ``pins`` collects the internal pinned
+    frames (-> BM25Index.caches)."""
+    # tf is the one heavy intermediate: the vocab pass, the impacts join and
+    # (on a build) doc_map all read it
+    tf = tf.persist()
     # vocabulary term ids + the global scalar stats in ONE pass: ttf (total
     # tokens of the term) sums to total_len, df sums to total_postings, and
     # the term-hash collision witness sums to hash_collisions — all ride
@@ -688,14 +725,7 @@ def build_index(
         config,
     ).cache()
     flat = impacts_flat(tf, vocab, n_docs, avg_doc_len, config)
-
-    # doc_map: doc_len = sum(tf) per doc (== token count); empty docs get 0.
-    # Built from the NARROW key frame — no second pass over the text; lazy
-    # (materialized by the first search/save, not on the build critical path).
-    doc_lens = tf.groupBy("doc_idx").agg(F.sum("tf").cast("int").alias("doc_len"))
-    doc_map = (
-        keys.join(doc_lens, "doc_idx", "left").fillna(0, subset=["doc_len"]).persist()
-    )
+    doc_map = doc_map.persist()
 
     # Persisted: an index is built once and searched many times; at cluster
     # scale this is a parquet write (io.save_index) instead of a cache.

@@ -271,6 +271,102 @@ def test_engine_add_transcripts_incremental(spark):
         bmx.add_transcripts(spark.createDataFrame(b))
 
 
+def _index_rows(idx):
+    """Everything an add must reproduce: postings digest and raw blocks,
+    doc_map and vocab rows, and the three scalar stats."""
+    from baguetter_spark.gate import postings_digest_of
+
+    return {
+        "digest": sorted(map(tuple, postings_digest_of(idx).collect())),
+        "postings": sorted(
+            (r["term_id"], r["block_id"], r["n_postings"], bytes(r["doc_ids_delta"]),
+             bytes(r["impacts_f32"]), bytes(r["tfs"]))
+            for r in idx.postings.collect()
+        ),
+        "doc_map": sorted(
+            map(tuple, idx.doc_map.select("doc_idx", "doc_id", "doc_len").collect())
+        ),
+        "vocab": sorted(
+            map(tuple, idx.vocab.select("term_id", "term", "df", "idf").collect())
+        ),
+        "scalars": (idx.n_docs, idx.avg_doc_len, idx.total_postings),
+    }
+
+
+def _replace_case(case):
+    """(base transcripts or None, delta transcripts, add kwargs) per case."""
+    base = gen_transcripts(36, 6, seed=71, vocab_size=50)
+    if case == "none":
+        return None, base, {}
+    if case == "all":
+        delta = base.copy()
+        delta["text"] = delta["text"] + " allswapped"
+        return base, delta, {}
+    if case == "disjoint":
+        delta = gen_transcripts(10, 3, seed=72, vocab_size=50)
+        # sorts before every base key, yet its turns are appended
+        delta["conv_id"] = "a" + delta["conv_id"]
+        return base, delta, {}
+    if case == "empty_docs":
+        delta = gen_transcripts(8, 2, seed=73, vocab_size=50)
+        delta["conv_id"] = "e" + delta["conv_id"]
+        delta.loc[::2, "text"] = ""
+        delta.loc[1::4, "text"] = "   "  # whitespace only: no tokens either
+        # and an empty turn that replaces a base turn
+        delta = pd.concat([delta, base.iloc[:1].assign(text="")], ignore_index=True)
+        return base, delta, {}
+    # ~10% of the base turns replaced, plus new turns
+    replaced = base.iloc[::10].copy()
+    replaced["text"] = replaced["text"] + " swapped"
+    fresh = gen_transcripts(6, 2, seed=74, vocab_size=50)
+    fresh["conv_id"] = "a" + fresh["conv_id"]
+    delta = pd.concat([replaced, fresh], ignore_index=True)
+    return base, delta, {"driver_key_bound": 0} if case == "distributed" else {}
+
+
+@pytest.mark.parametrize(
+    "case", ["disjoint", "ten_pct", "distributed", "all", "none", "empty_docs", "reloaded"]
+)
+def test_add_transcripts_equals_segment_merge(spark, tmp_path, case):
+    """add_transcripts (one reindex pass) == the segment composition it
+    replaced: remove the replaced turns from the base, build the delta as
+    a segment, merge, cut lineage.  Same postings, doc_map, vocab and
+    stats, bit for bit, on every replace shape.  (The oracle also cuts
+    lineage after the removal: a checkpoint changes no data, and planning
+    two stacked reindexes costs minutes and GiBs of driver heap.)"""
+    from baguetter_spark.engine import BM25SparkIndex
+    from baguetter_spark.merge import remove_docs, truncate_lineage
+
+    cfg = _cfg()
+    base_pdf, delta_pdf, kwargs = _replace_case(case)
+    delta = spark.createDataFrame(delta_pdf)
+    eng = BM25SparkIndex(spark, cfg)
+    if base_pdf is None:
+        oracle = build_index(spark, delta, cfg)
+    else:
+        eng.build(spark.createDataFrame(base_pdf))
+        if case == "reloaded":
+            save_index(eng.index, str(tmp_path / "base"))
+            eng.index = load_index(spark, str(tmp_path / "base"))
+        base = eng.index
+        delta_ids = {f"{c}:{t}" for c, t in zip(delta_pdf["conv_id"], delta_pdf["turn_idx"])}
+        replaced = [
+            r["doc_id"] for r in base.doc_map.collect() if r["doc_id"] in delta_ids
+        ]
+        if len(replaced) == base.n_docs:
+            oracle = build_index(spark, delta, cfg)
+        else:
+            kept = truncate_lineage(remove_docs(spark, base, replaced)) if replaced else base
+            oracle = truncate_lineage(
+                merge_indexes(spark, [kept, build_index(spark, delta, cfg)], cfg)
+            )
+    want = _index_rows(oracle)
+
+    eng.add_transcripts(delta, **kwargs)
+    assert _index_rows(eng.index) == want
+    assert eng.index.n_docs == len(want["doc_map"])
+
+
 def test_release_and_truncate_free_cached_frames(spark):
     """release_index unpersists the public tables AND the internal pins
     (tf/zipindex two-pass state); truncate_lineage releases its input
@@ -452,9 +548,10 @@ def test_bmx_build_leaves_list_mode_and_releases(spark):
 
 
 def test_add_transcripts_failure_leaves_state_intact(spark, monkeypatch):
-    """A mid-operation failure (merge dies) must leave the engine exactly as
-    it was: index untouched and still searchable, list-API mode intact, and
-    the half-built segment's pinned frames released."""
+    """A mid-operation failure (the final lineage cut dies) must leave the
+    engine exactly as it was: index untouched and still searchable,
+    list-API mode intact, and the half-built index's pinned frames
+    released."""
     import baguetter_spark.merge as merge_mod
     from baguetter_spark.engine import BM25SparkIndex
 
@@ -464,19 +561,26 @@ def test_add_transcripts_failure_leaves_state_intact(spark, monkeypatch):
     )
     before = eng.index
 
-    def boom(*a, **k):
-        raise RuntimeError("merge exploded")
+    built = []
 
-    monkeypatch.setattr(merge_mod, "merge_indexes", boom)
+    def boom(index):
+        built.append(index)
+        raise RuntimeError("checkpoint exploded")
+
+    monkeypatch.setattr(merge_mod, "truncate_lineage", boom)
     t = gen_transcripts(6, 3, seed=68, vocab_size=30)
-    with pytest.raises(RuntimeError, match="merge exploded"):
+    with pytest.raises(RuntimeError, match="checkpoint exploded"):
         eng.add_transcripts(spark.createDataFrame(t))
+    (half,) = built
+    assert not any(
+        f.is_cached for f in (half.doc_map, half.vocab, half.postings, *half.caches)
+    )
 
     assert eng.index is before  # untouched
     assert eng.synthetic_turn_suffix is True  # still in list-API mode
     keys, _ = eng.search("alpha")
     assert keys[0] == "doc1"  # suffix stripping still applies
-    # and the engine recovers: the same op succeeds once merge works again
+    # and the engine recovers: the same op succeeds once the cut works again
     monkeypatch.undo()
     eng.add_transcripts(spark.createDataFrame(t))
     assert eng.index.n_docs == 2 + 6
