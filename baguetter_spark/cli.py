@@ -8,7 +8,7 @@ paths in/out, and a SparkSession that inherits spark-submit's master/conf.
     python scripts/make_pyfiles_zip.py dist/baguetter_spark.zip
     spark-submit --py-files dist/baguetter_spark.zip baguetter_spark/cli.py \\
         build-index --input s3://.../transcripts --output s3://.../index \\
-        --resumable --assume-sorted
+        --resumable
 
 (spark-submit has no ``-m``: the app file is this module submitted by
 path; the zip provides the package to the driver AND the executors'
@@ -16,9 +16,12 @@ UDF unpickling.  Verified end-to-end from a clean cwd — build-index +
 search produce correct results with imports resolved from the zip only.)
 
 Subcommands:
-- ``build-index``: transcripts parquet -> saved index (optionally through
-  the checkpoint-resumable staged build, io.build_index_resumable, and the
-  shuffle-free presorted path for key-sorted tables);
+- ``build-index``: transcripts parquet -> saved index.  ``--resumable``
+  runs the build's stages with a parquet checkpoint each
+  (io.build_index_resumable: a re-run skips finished stages, and the
+  checkpoints ARE the saved index); otherwise the in-session build runs,
+  with ``--assume-sorted`` taking the shuffle-free presorted path for
+  key-sorted tables, and the index is saved;
 - ``search``: saved index + queries parquet (query_id, text) -> results
   parquet (query_id, rank, doc_id, score);
 - ``evaluate``: datasets base dir (corpus/queries/qrels parquet) ->

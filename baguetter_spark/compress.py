@@ -1,4 +1,4 @@
-"""Posting-block codecs: delta + varint doc ids, raw-f32 impacts, block maxes.
+"""Posting-block codecs: delta + varint doc ids, raw-f32 impacts, varint tfs.
 
 The reference stores postings as scipy CSC arrays in one npz
 (`baguetter/indices/sparse/models/bm25/index.py:133-147`); at 10^12-doc scale
@@ -9,8 +9,10 @@ we instead store docID-ascending posting *blocks* with:
 - ``impacts``: raw little-endian float32 bytes (bit-exact roundtrip),
 - ``tfs``: varint term frequencies (kept so segments can be merged by
   recomputing impacts under new global stats — merge == rebuild semantics,
-  reference base.py:244-256),
-- per-sub-block max impact metadata for block-max WAND pruning.
+  reference base.py:244-256).
+
+Each block row also carries its max impact (``block_max``, written by the
+encoder in indexer.assemble_posting_blocks) for the pruned search paths.
 """
 
 from __future__ import annotations
@@ -108,15 +110,3 @@ def encode_tfs(tfs: np.ndarray) -> bytes:
 
 def decode_tfs(buf: bytes, count: int) -> np.ndarray:
     return varint_decode(buf, count).astype(np.int64)
-
-
-def sub_block_maxes(impacts: np.ndarray, sub_block_size: int) -> np.ndarray:
-    """Max impact per fixed-size sub-block (WAND skip metadata)."""
-    imp = np.asarray(impacts, dtype=np.float32)
-    n = imp.size
-    if n == 0:
-        return np.empty(0, dtype=np.float32)
-    n_blocks = (n + sub_block_size - 1) // sub_block_size
-    padded = np.full(n_blocks * sub_block_size, -np.inf, dtype=np.float32)
-    padded[:n] = imp
-    return padded.reshape(n_blocks, sub_block_size).max(axis=1)

@@ -100,7 +100,6 @@ class SparseIndexConfig:
     # --- engine-side knobs (no reference counterpart; scale/layout only,
     # they do not change scoring semantics) ---
     block_doc_range: int = 1 << 16  # doc_idx range per posting-block row (bounds shuffle groups)
-    sub_block_size: int = 128  # postings per block-max sub-block (WAND granularity)
 
     def __post_init__(self) -> None:
         if self.method not in BM25_METHODS:
@@ -118,6 +117,9 @@ class SparseIndexConfig:
     @classmethod
     def from_dict(cls, d: dict[str, Any]) -> SparseIndexConfig:
         d = dict(d)
+        # written by indexes saved before the per-sub-block maxima were
+        # dropped from the posting rows; nothing reads it
+        d.pop("sub_block_size", None)
         pre = d.pop("preprocessor", None)
         cfg = cls(**d)
         if pre is not None:

@@ -119,6 +119,10 @@ class StageRunner:
     table read back; otherwise the producer runs, the table is written, and
     the manifest (rows, per-partition lineage, wall seconds) is committed
     LAST — a crash mid-write leaves no manifest, so re-entry recomputes.
+
+    ``stats`` holds driver-side scalars the producer computes alongside its
+    table: they are recorded in the manifest when the stage runs and
+    restored into the dict when it is skipped.
     """
 
     def __init__(self, io: TableIO) -> None:
@@ -133,6 +137,7 @@ class StageRunner:
         producer: Callable[[], DataFrame],
         *,
         range_by: list[str] | None = None,
+        stats: dict | None = None,
     ) -> DataFrame:
         stage_path = self.io.path(name)
         manifest = read_manifest(stage_path)
@@ -142,6 +147,8 @@ class StageRunner:
             and manifest.get("fingerprint") == fingerprint
         ):
             self.skipped.append(name)
+            if stats is not None:
+                stats.update(manifest["stats"])
             return self.io.read(name)
 
         t0 = time.time()
@@ -149,18 +156,18 @@ class StageRunner:
         self.io.write(df, name, range_by=range_by)
         out = self.io.read(name)
         lineage = _partition_lineage(out)
-        write_manifest(
-            stage_path,
-            {
-                "stage": name,
-                "status": "SUCCESS",
-                "fingerprint": fingerprint,
-                "rows": sum(p["rows"] for p in lineage),
-                "partitions": lineage,
-                "wall_sec": round(time.time() - t0, 3),
-                "created_unix": int(time.time()),
-            },
-        )
+        payload = {
+            "stage": name,
+            "status": "SUCCESS",
+            "fingerprint": fingerprint,
+            "rows": sum(p["rows"] for p in lineage),
+            "partitions": lineage,
+            "wall_sec": round(time.time() - t0, 3),
+            "created_unix": int(time.time()),
+        }
+        if stats is not None:
+            payload["stats"] = stats
+        write_manifest(stage_path, payload)
         self.executed.append(name)
         return out
 
@@ -197,6 +204,15 @@ def save_index(index, base_path: str, *, fmt: str = "parquet") -> str:
     return base_path
 
 
+# how each checkpointed build stage is laid out on disk
+_STAGE_RANGE = {
+    "tf": ["doc_idx"],
+    "vocab": ["term_id"],
+    "doc_map": ["doc_idx"],
+    "postings": ["term_id", "block_id"],
+}
+
+
 def build_index_resumable(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -205,129 +221,51 @@ def build_index_resumable(
     *,
     input_id: str = "input",
 ) -> BM25Index:
-    """Checkpoint-resumable staged build: every stage materializes to parquet
-    with a SUCCESS manifest (rows + per-partition lineage + wall time); a
-    re-run with the same ``input_id`` and config skips completed stages (the
-    north rule's "resumable from checkpoint with per-partition lineage +
-    metrics").  Stage graph:
+    """Checkpoint-resumable build: the stage graph of indexer.build_index
+    (keyed_term_frequencies -> doc_map_from -> index_from_term_frequencies)
+    with every stage materialized to parquet under a SUCCESS manifest (rows
+    + per-partition lineage + wall time) instead of persisted in-session.
+    A re-run with the same ``input_id`` and config skips completed stages
+    (the north rule's "resumable from checkpoint with per-partition lineage
+    + metrics").  Stages:
 
-        stage_tf        (tokenize -> flat explode -> per-(doc,term) counts)
+        stage_tf        (doc_idx, doc_len, term_hash, term?, tf)
+        stage_vocab     (sorted-rank ids, df, idf; its manifest also keeps
+                         n_docs / total_len / total_postings)
         stage_doc_map   (doc_idx, doc_id, doc_len)
-        stage_stats     (n_docs, avg_doc_len — manifest only)
-        stage_vocab     (sorted-rank ids, df, idf)
         stage_postings  (encoded blocks)
     """
-    from pyspark.sql import functions as F2
-
     from baguetter_spark.operators.indexer import (
-        assemble_posting_blocks,
-        build_vocab,
-        corpus_stats,
-        docs_from_transcripts,
-        impacts_flat,
-        indexed_keys,
-        local_term_frequencies,
+        doc_map_from,
+        index_from_term_frequencies,
+        keyed_term_frequencies,
     )
 
-    io = TableIO(spark, workdir)
-    runner = StageRunner(io)
-    # v3: hashed-term tf schema (doc_idx, doc_len, term_hash, term?, tf) —
-    # the version tag invalidates pre-hash checkpoints instead of resuming
-    # into a schema mismatch
-    base_fp = f"{input_id}:v3:{config.config_hash()}"
+    runner = StageRunner(TableIO(spark, workdir))
+    # v4: the corpus stats ride the stage_vocab manifest — the version tag
+    # makes older checkpoints recompute instead of resuming without them
+    base_fp = f"{input_id}:v4:{config.config_hash()}"
 
-    pins: list = []  # zipindex/build_vocab pinned frames; every stage lands
-    # in parquet, so the pins are pure session garbage once the run finishes
-    keys = indexed_keys(transcripts, cleanup=pins)
-    # shuffle_hash: avoid the SMJ string-sort of the text side (see indexer.py)
-    docs = (
-        docs_from_transcripts(transcripts)
-        .select("conv_id", "turn_idx", "text")
-        .join(
-            keys.select("conv_id", "turn_idx", "doc_idx").hint("shuffle_hash"),
-            ["conv_id", "turn_idx"],
+    def checkpoint(name: str, produce, stats: dict | None = None) -> DataFrame:
+        return runner.run(
+            f"stage_{name}",
+            f"{base_fp}:{name}",
+            produce,
+            range_by=_STAGE_RANGE[name],
+            stats=stats,
         )
-        .select("doc_idx", "text")
-    )
 
-    tf = runner.run(
-        "stage_tf",
-        f"{base_fp}:tf",
-        lambda: local_term_frequencies(docs, config),
-        range_by=["doc_idx"],
+    pins: list = []
+    keys, tf, n_docs = keyed_term_frequencies(transcripts, config, pins)
+    index = index_from_term_frequencies(
+        tf, lambda kept: doc_map_from(keys, kept), n_docs, config, pins, checkpoint
     )
-
-    doc_map = runner.run(
-        "stage_doc_map",
-        f"{base_fp}:doc_map",
-        lambda: keys.select("doc_idx", "doc_id")
-        .join(
-            tf.groupBy("doc_idx").agg(F2.sum("tf").cast("int").alias("doc_len")),
-            "doc_idx",
-            "left",
-        )
-        .fillna(0, subset=["doc_len"]),
-        range_by=["doc_idx"],
-    )
-
-    stats_path = io.path("stage_stats")
-    stats_manifest = read_manifest(stats_path)
-    if not (
-        stats_manifest
-        and stats_manifest.get("status") == "SUCCESS"
-        and stats_manifest.get("fingerprint") == f"{base_fp}:stats"
-    ):
-        n_docs, avg_doc_len = corpus_stats(doc_map)
-        write_manifest(
-            stats_path,
-            {
-                "stage": "stage_stats",
-                "status": "SUCCESS",
-                "fingerprint": f"{base_fp}:stats",
-                "n_docs": n_docs,
-                "avg_doc_len": avg_doc_len,
-            },
-        )
-        stats_manifest = read_manifest(stats_path)
-    else:
-        runner.skipped.append("stage_stats")
-    n_docs = int(stats_manifest["n_docs"])
-    avg_doc_len = float(stats_manifest["avg_doc_len"])
-
-    vocab = runner.run(
-        "stage_vocab",
-        f"{base_fp}:vocab",
-        lambda: build_vocab(tf, n_docs, avg_doc_len, config, cleanup=pins),
-        range_by=["term_id"],
-    )
-    postings = runner.run(
-        "stage_postings",
-        f"{base_fp}:postings",
-        lambda: assemble_posting_blocks(
-            impacts_flat(tf, vocab, n_docs, avg_doc_len, config),
-            config,
-        ),
-        range_by=["term_id", "block_id"],
-    )
-
     # every stage is parquet-backed now: release the builders' pinned frames
     # instead of carrying them (a resumable-seeded maintenance chain would
-    # otherwise leak one set per build — they are invisible to release_index
-    # because the public tables here are parquet reloads, not the plans the
-    # pins served)
+    # otherwise leak one set per build)
     for df in pins:
         df.unpersist(blocking=False)
-    index = BM25Index(
-        doc_map=doc_map,
-        vocab=vocab,
-        postings=postings,
-        n_docs=n_docs,
-        avg_doc_len=avg_doc_len,
-        total_postings=int(
-            vocab.agg(F.sum("df").alias("s")).collect()[0]["s"] or 0
-        ),
-        config=config,
-    )
+    index.caches = ()
     write_manifest(
         workdir,
         {

@@ -211,7 +211,7 @@ def _reindex(
     """Union (rows, doc_map) parts into one corpus and run the build tail."""
     rows = reduce(DataFrame.unionByName, [r for r, _ in parts])
     doc_map = reduce(DataFrame.unionByName, [d for _, d in parts])
-    return index_from_term_frequencies(rows, doc_map, n_docs, config, pins)
+    return index_from_term_frequencies(rows, lambda _rows: doc_map, n_docs, config, pins)
 
 
 def merge_indexes(
@@ -353,15 +353,18 @@ def add_docs(
         )
         mapping, n_surv = renumber_survivors(spark, index, removed, pins)
         keys, tf, n_new = keyed_term_frequencies(transcripts, config, pins, offset=n_surv)
-        rows, doc_map = tf, None
+        rows, base_map = tf, None
         if n_surv:  # a batch that replaces every turn leaves no base rows
-            base_rows, doc_map = decode_postings(index, mapping)
+            base_rows, base_map = decode_postings(index, mapping)
             rows = base_rows.unionByName(tf)
-        # the batch's doc lengths read the reindex's pinned rows: the batch
-        # is tokenized once
-        new_map = doc_map_from(keys, rows.where(F.col("doc_idx") >= n_surv))
-        doc_map = new_map if doc_map is None else doc_map.unionByName(new_map)
-        out = index_from_term_frequencies(rows, doc_map, n_surv + n_new, config, pins)
+
+        def doc_map_of(kept: DataFrame) -> DataFrame:
+            # the batch's doc lengths read the reindex's kept rows: the batch
+            # is tokenized once
+            new_map = doc_map_from(keys, kept.where(F.col("doc_idx") >= n_surv))
+            return new_map if base_map is None else base_map.unionByName(new_map)
+
+        out = index_from_term_frequencies(rows, doc_map_of, n_surv + n_new, config, pins)
         return truncate_lineage(out)
     except BaseException:
         release_index(out)

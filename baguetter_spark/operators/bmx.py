@@ -4,8 +4,8 @@ Re-expresses the reference BMX path (SURVEY §2 B12-B14, Q10-Q11;
 `baguetter/indices/sparse/models/bmx/index.py`, `.../bmx.py`) as DataFrame
 stages sharing the BM25 build skeleton:
 
-    tokenize-explode (one Arrow pass)   ~ CountVectorizer     (index.py:209-233)
-    -> TF agg                           ~ doc-term matrix     (B12)
+    keys + tokenize + per-doc TF        ~ CountVectorizer     (index.py:209-233)
+      (indexer.keyed_term_frequencies)    doc-term matrix     (B12)
     -> df filter (min_df) + sorted vocab~ feature selection   (index.py:211-218)
     -> per-term idf(f32) + entropy(f64) ~ inverted index      (B13, index.py:151-183)
     -> per-doc filtered lens, rel_lens  ~ doc_lens            (B14, index.py:245-247)
@@ -53,9 +53,8 @@ from baguetter_spark.compress import (
 from baguetter_spark.config import SparseIndexConfig
 from baguetter_spark.operators.indexer import (
     _check_collisions,
-    docs_from_transcripts,
     hashed_term_stats,
-    local_term_frequencies,
+    keyed_term_frequencies,
 )
 from baguetter_spark.operators.search import tokenize_queries
 from baguetter_spark.operators.zipindex import zip_with_index
@@ -110,27 +109,10 @@ def build_bmx_index(
     is_f32 = config.dtype == "float32"
     pins: list = []  # internal pinned frames -> BMXIndex.caches
 
-    # shuffle_hash: avoid the SMJ string-sort of the text side (see indexer.py)
-    keys_frame = docs_from_transcripts(transcripts).select(
-        "conv_id", "turn_idx", "doc_id"
-    )
-    keys_full, kstats = zip_with_index(
-        keys_frame, ["conv_id", "turn_idx"], "doc_idx", extra_sums={}, cleanup=pins
-    )
-    n_docs = kstats["count"]  # piggybacked on the zipindex counts pass
-    keys = keys_full
-    docs = (
-        docs_from_transcripts(transcripts)
-        .select("conv_id", "turn_idx", "text")
-        .join(
-            keys.select("conv_id", "turn_idx", "doc_idx").hint("shuffle_hash"),
-            ["conv_id", "turn_idx"],
-        )
-        .select("doc_idx", "text")
-    )
-    # per-doc counts fused into the tokenizer Arrow pass (no token-level
-    # shuffle; 8-byte term_hash keys — see indexer.local_term_frequencies)
-    tf = local_term_frequencies(docs, config).persist()
+    # keys + per-doc counts: the BM25 build's prelude (one Arrow tokenizer
+    # pass, 8-byte term_hash keys — see indexer.keyed_term_frequencies)
+    keys, tf, n_docs = keyed_term_frequencies(transcripts, config, pins)
+    tf = tf.persist()
     pins.append(tf)
 
     # vocabulary: sorted rank over terms with df >= min_df (CountVectorizer
@@ -221,8 +203,7 @@ def build_bmx_index(
     )
     doc_lens = kept_tf.groupBy("doc_idx").agg(F.sum("tf").cast("long").alias("doc_len"))
     doc_map = (
-        keys.select("doc_idx", "doc_id")
-        .join(doc_lens, "doc_idx", "left")
+        keys.join(doc_lens, "doc_idx", "left")
         .fillna(0, subset=["doc_len"])
         .persist()
     )

@@ -4,16 +4,15 @@ Spark-first re-expression of the reference build dataflow
 (`baguetter/indices/sparse/models/bm25/index.py:50-147` and
 `.../scoring.py:207-329`):
 
-    tokenize (pandas UDF)                 ~ process_many   (B1/T11)
-    -> stable doc_idx (zip_with_index)    ~ key_mapping    (base.py:251)
-    -> explode tokens                     ~ corpus scan    (B1)
-    -> groupBy(doc,term).count            ~ per-doc TF     (B7)
-    -> groupBy(term).count                ~ doc freq       (B4)
+    stable doc_idx (zip_with_index)       ~ key_mapping    (base.py:251)
+    -> tokenize + per-doc TF (one Arrow   ~ corpus scan +  (B1/T11/B7)
+       pass, 8-byte term_hash keys)         per-doc TF
+    -> groupBy(term_hash): df, ttf        ~ doc freq       (B4)
     -> sorted-term zip_with_index         ~ vocabulary     (B2)
     -> idf/nonoccurrence pandas UDF       ~ idf array      (B6/B10)
     -> join + float32 impact kernel       ~ impacts        (B8/B9)
     -> groupBy(term, doc-range block)     ~ CSC assembly   (B11)
-       with delta+varint/f32 encoding + per-sub-block max metadata
+       with delta+varint/f32 encoding + a per-block max impact
 
 Scale notes (the whole point of the re-design):
 - no global window: doc ids and term ids use the two-pass range zipWithIndex;
@@ -31,23 +30,16 @@ Scale notes (the whole point of the re-design):
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from baguetter_spark.compress import (
-    encode_doc_ids,
-    encode_impacts,
-    encode_tfs,
-    sub_block_maxes,
-)
+from baguetter_spark.compress import encode_doc_ids, encode_impacts, encode_tfs
 from baguetter_spark.config import NON_OCCURRENCE_METHODS, SparseIndexConfig
-from baguetter_spark.functions.preprocess import tokens_udf
 from baguetter_spark.operators.zipindex import zip_with_index
 
 # ---------------------------------------------------------------------------
@@ -209,64 +201,6 @@ def docs_from_transcripts(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def indexed_keys(transcripts: DataFrame, cleanup: list | None = None) -> DataFrame:
-    """transcripts -> (conv_id, turn_idx, doc_id, doc_idx); doc_idx = rank of
-    (conv_id, turn_idx) — the reference's insertion order (SURVEY §4.2.4).
-
-    The rank is computed over the NARROW key frame — parquet column pruning
-    keeps the zipindex range-sampling pass and its persisted two-pass state
-    at ~2% of corpus size instead of caching the raw text of the whole
-    corpus.  Consumers that need text (the tokenizer) join it back on the
-    key so the text column crosses the wire exactly once; consumers that
-    don't (doc_map) read the persisted narrow frame.  At 10^12 turns this is
-    the difference between persisting terabytes and persisting key columns."""
-    keys = docs_from_transcripts(transcripts).select("conv_id", "turn_idx", "doc_id")
-    return zip_with_index(keys, ["conv_id", "turn_idx"], "doc_idx", cleanup=cleanup)
-
-
-def indexed_docs(transcripts: DataFrame) -> DataFrame:
-    """transcripts -> (doc_idx, doc_id, text): the text-joined form (see
-    indexed_keys for the narrow-rank design)."""
-    keys = indexed_keys(transcripts)
-    docs = docs_from_transcripts(transcripts).select("conv_id", "turn_idx", "text")
-    return docs.join(keys.hint("shuffle_hash"), ["conv_id", "turn_idx"]).select(
-        "doc_idx", "doc_id", "text"
-    )
-
-
-def exploded_terms(docs: DataFrame, config: SparseIndexConfig) -> DataFrame:
-    """(doc_idx, text) -> flat (doc_idx, doc_len, term) rows, tokenizing and
-    exploding INSIDE one Arrow pass.
-
-    Emitting flat columns instead of array<string> avoids the expensive
-    nested-Arrow transfer, the JVM explode stage, and the GC pressure of
-    caching token arrays — the corpus crosses the Python boundary exactly
-    once, as three primitive columns.  doc_len rides along (+4 bytes/row)
-    so the impact kernel never needs a doc-length join at any scale."""
-    from baguetter_spark.functions.preprocess import process_series
-
-    pre = config.preprocessor
-
-    def tok_explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            toks = process_series(pdf["text"], pre)
-            lens = toks.map(len).to_numpy(dtype=np.int64)
-            doc_idx = np.repeat(pdf["doc_idx"].to_numpy(dtype=np.int64), lens)
-            doc_len = np.repeat(lens, lens)
-            flat: list[str] = []
-            for lst in toks:
-                flat.extend(lst)
-            yield pd.DataFrame(
-                {"doc_idx": doc_idx, "doc_len": doc_len.astype(np.int32), "term": flat}
-            )
-
-    return docs.select("doc_idx", "text").mapInPandas(
-        tok_explode, schema="doc_idx long, doc_len int, term string"
-    )
-
-
 def hash_terms(terms: np.ndarray) -> np.ndarray:
     """Deterministic 64-bit term hash (SipHash via pandas' fixed-key
     hash_array — stable across processes/machines, independent of
@@ -311,8 +245,8 @@ def local_term_frequencies(docs: DataFrame, config: SparseIndexConfig) -> DataFr
     already aggregated: the engine's biggest shuffle (the token-level TF
     groupBy) disappears entirely.  Each term's string is emitted at most
     once per partition (``term`` nullable elsewhere); everything downstream
-    keys on the 8-byte term_hash.  Replaces exploded_terms+groupBy
-    (reference corpus scan + per-doc TF, scoring.py:207-329 B1/B7)."""
+    keys on the 8-byte term_hash (reference corpus scan + per-doc TF,
+    scoring.py:207-329 B1/B7)."""
     pre = config.preprocessor
 
     def tok_tf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -390,38 +324,6 @@ def count_terms_batch(
     )
 
 
-def tokenized_docs(transcripts: DataFrame, config: SparseIndexConfig) -> DataFrame:
-    """transcripts -> (doc_idx, doc_id, tokens, doc_len): array-valued form
-    (kept for tests/consumers that need per-doc token lists; the build
-    pipeline itself uses the flat exploded_terms path)."""
-    docs = indexed_docs(transcripts)
-    tokenize = tokens_udf(config.preprocessor)
-    return (
-        docs.withColumn("tokens", tokenize(F.col("text")))
-        .withColumn("doc_len", F.size("tokens"))
-        .select("doc_idx", "doc_id", "tokens", "doc_len")
-    )
-
-
-def corpus_stats(doc_map: DataFrame) -> tuple[int, float]:
-    """n_docs + float64 avg doc length (reference index.py:87 computes
-    float(np.mean(...)); sum/count in exact int64 then one float64 division
-    is bit-equal for integer lengths)."""
-    row = doc_map.agg(
-        F.count("*").alias("n"), F.sum("doc_len").alias("total_len")
-    ).collect()[0]
-    n_docs = int(row["n"])
-    avg_doc_len = float(row["total_len"]) / n_docs if n_docs else 0.0
-    return n_docs, avg_doc_len
-
-
-def term_frequencies(docs_tok: DataFrame) -> DataFrame:
-    """explode -> per-(doc, term) counts (B7); hash aggregate with map-side
-    partial combine — the heavy shuffle is on (doc_idx, term)."""
-    doc_terms = docs_tok.select("doc_idx", "doc_len", F.explode("tokens").alias("term"))
-    return doc_terms.groupBy("doc_idx", "doc_len", "term").agg(F.count("*").alias("tf"))
-
-
 def vocab_scores(
     vocab_base: DataFrame, n_docs: int, avg_doc_len: float, config: SparseIndexConfig
 ) -> DataFrame:
@@ -484,35 +386,6 @@ def _check_collisions(n: int) -> None:
             "the string-keyed path or report the colliding corpus."
         )
         raise RuntimeError(msg)
-
-
-def build_vocab(
-    tf: DataFrame,
-    n_docs: int,
-    avg_doc_len: float,
-    config: SparseIndexConfig,
-    cleanup: list | None = None,
-) -> DataFrame:
-    """Sorted-rank term ids (B2) + df (B4) + idf/nonoccurrence (B6/B10).
-
-    Input tf carries (term_hash, term?) — see local_term_frequencies.
-    ``cleanup`` collects the internal pinned frames (see zip_with_index)."""
-    # persist the (small) term aggregate: zip_with_index evaluates its input
-    # for range sampling + counts + assignment — without this, the heavy
-    # per-(doc,term) frame would aggregate three times
-    term_stats = hashed_term_stats(tf).persist()
-    if cleanup is not None:
-        cleanup.append(term_stats)
-    vocab_base, vstats = zip_with_index(
-        term_stats, ["term"], "term_id", extra_sums={"coll": "coll"}, cleanup=cleanup
-    )
-    _check_collisions(vstats["coll"])
-    return vocab_scores(
-        vocab_base.select("term_id", "term_hash", "term", "df"),
-        n_docs,
-        avg_doc_len,
-        config,
-    )
 
 
 def impacts_flat(
@@ -578,8 +451,13 @@ def build_index(
     *,
     assume_sorted: bool | str = False,
 ) -> BM25Index:
-    """Build the full BM25 index from a transcripts DataFrame (in-session
-    caching; for the checkpoint-resumable variant see io.build_index_resumable).
+    """Build the full BM25 index from a transcripts DataFrame.
+
+    The stage graph: keys + per-doc TF (keyed_term_frequencies, or the
+    presorted path) -> doc_map (doc_map_from) -> vocab, impacts and posting
+    blocks (index_from_term_frequencies).  Every stage is persisted
+    in-session; io.build_index_resumable runs the same graph with each
+    stage checkpointed to parquet instead.
 
     ``assume_sorted=True``: the input is expected partition-ordered by
     (conv_id, turn_idx) — the natural state of an Iceberg/parquet table
@@ -632,7 +510,9 @@ def build_index(
         tf = presorted_local_tf(transcripts, layout, config)
     else:
         keys, tf, n_docs = keyed_term_frequencies(transcripts, config, pins)
-    return index_from_term_frequencies(tf, doc_map_from(keys, tf), n_docs, config, pins)
+    return index_from_term_frequencies(
+        tf, lambda kept: doc_map_from(keys, kept), n_docs, config, pins
+    )
 
 
 def doc_map_from(keys: DataFrame, tf: DataFrame) -> DataFrame:
@@ -651,7 +531,12 @@ def keyed_term_frequencies(
     """transcripts -> (keys (doc_idx, doc_id), tf rows, n_docs): doc_idx =
     ``offset`` + rank of (conv_id, turn_idx), the general (shuffle) path of
     build_index.  ``offset`` places a batch after the docs of an existing
-    index (merge.add_docs)."""
+    index (merge.add_docs).
+
+    The rank runs over the NARROW key frame: parquet column pruning keeps
+    the zipindex sampling pass and its persisted two-pass state at ~2% of
+    corpus size instead of caching the corpus text, and the text joins back
+    on the key so it crosses the wire exactly once."""
     # shuffle_hash: without the hint this compiles to a sort-merge join
     # that fully SORTS the text side by its string key — pure overhead,
     # since the text only needs to MEET its doc_idx, not be ordered by
@@ -680,56 +565,86 @@ def keyed_term_frequencies(
     return keys, local_term_frequencies(docs, config), kstats["count"]
 
 
+def _persist_stage(
+    name: str, produce: Callable[[], DataFrame], stats: dict | None = None
+) -> DataFrame:
+    """The in-session stage policy of index_from_term_frequencies: each
+    stage is a lazy frame pinned by ``persist``; ``stats`` is filled by the
+    producer itself.  The checkpointed counterpart is io's StageRunner."""
+    return produce().persist()
+
+
 def index_from_term_frequencies(
     tf: DataFrame,
-    doc_map: DataFrame,
+    doc_map_of: Callable[[DataFrame], DataFrame],
     n_docs: int,
     config: SparseIndexConfig,
     pins: list,
+    keep: Callable[..., DataFrame] = _persist_stage,
 ) -> BM25Index:
     """Everything after tokenization: tf rows (TF_BATCH_SCHEMA) + the
-    doc_map of all ``n_docs`` docs -> the index.  Shared by build_index and
-    the maintenance ops in merge.py, which feed it decoded posting rows
-    instead of tokenizer output.  ``pins`` collects the internal pinned
-    frames (-> BM25Index.caches)."""
+    doc_map of all ``n_docs`` docs (``doc_map_of`` the kept tf rows) -> the
+    index.  Shared by build_index, io.build_index_resumable and the
+    maintenance ops in merge.py, which feed it decoded posting rows instead
+    of tokenizer output.  ``pins`` collects the internal pinned frames
+    (-> BM25Index.caches).
+
+    The four heavy frames are stages, in order tf, vocab, doc_map,
+    postings: ``keep(name, produce, stats)`` decides how each is kept —
+    persisted in-session by default, or checkpointed to parquet by the
+    resumable build.  The global scalars ride the vocab stage's ``stats``,
+    so a stage restored from a checkpoint brings them back with it."""
     # tf is the one heavy intermediate: the vocab pass, the impacts join and
     # (on a build) doc_map all read it
-    tf = tf.persist()
-    # vocabulary term ids + the global scalar stats in ONE pass: ttf (total
-    # tokens of the term) sums to total_len, df sums to total_postings, and
-    # the term-hash collision witness sums to hash_collisions — all ride
-    # the zipindex counts job instead of separate driver actions
-    term_stats = hashed_term_stats(tf).persist()
-    pins += [tf, term_stats]
-    vocab_base, vstats = zip_with_index(
-        term_stats,
-        ["term"],
-        "term_id",
-        extra_sums={
-            "total_len": "ttf",
-            "total_postings": "df",
-            "hash_collisions": "coll",
-        },
-        cleanup=pins,
+    tf = keep("tf", lambda: tf)
+    pins.append(tf)
+    stats = {"n_docs": n_docs}
+
+    def vocab_stage() -> DataFrame:
+        # vocabulary term ids + the global scalar stats in ONE pass: ttf
+        # (total tokens of the term) sums to total_len, df sums to
+        # total_postings, and the term-hash collision witness sums to
+        # hash_collisions — all ride the zipindex counts job instead of
+        # separate driver actions
+        term_stats = hashed_term_stats(tf).persist()
+        pins.append(term_stats)
+        vocab_base, vstats = zip_with_index(
+            term_stats,
+            ["term"],
+            "term_id",
+            extra_sums={
+                "total_len": "ttf",
+                "total_postings": "df",
+                "hash_collisions": "coll",
+            },
+            cleanup=pins,
+        )
+        _check_collisions(vstats["hash_collisions"])
+        stats.update(
+            total_len=vstats["total_len"], total_postings=vstats["total_postings"]
+        )
+        return vocab_scores(
+            vocab_base.select("term_id", "term_hash", "term", "df"),
+            n_docs,
+            _avg_doc_len(stats),
+            config,
+        )
+
+    vocab = keep("vocab", vocab_stage, stats)
+    # after the vocab pass: in-session, that pass has materialized tf, so
+    # doc_map's join is planned with tf's real size (a broadcast of the doc
+    # lengths while they are small) instead of being re-planned at run time
+    doc_map = keep("doc_map", lambda: doc_map_of(tf))
+    avg_doc_len = _avg_doc_len(stats)
+    # an index is built once and searched many times: in-session the
+    # postings are persisted, at cluster scale they are a parquet write
+    # (io.save_index / the resumable build's checkpoint)
+    postings = keep(
+        "postings",
+        lambda: assemble_posting_blocks(
+            impacts_flat(tf, vocab, n_docs, avg_doc_len, config), config
+        ),
     )
-    _check_collisions(vstats["hash_collisions"])
-    total_postings = int(vstats["total_postings"])
-    # float64 avg over exact int64 sum — bit-equal to the reference's
-    # float(np.mean(...)) for integer lengths (see corpus_stats)
-    avg_doc_len = float(vstats["total_len"]) / n_docs if n_docs else 0.0
-
-    vocab = vocab_scores(
-        vocab_base.select("term_id", "term_hash", "term", "df"),
-        n_docs,
-        avg_doc_len,
-        config,
-    ).cache()
-    flat = impacts_flat(tf, vocab, n_docs, avg_doc_len, config)
-    doc_map = doc_map.persist()
-
-    # Persisted: an index is built once and searched many times; at cluster
-    # scale this is a parquet write (io.save_index) instead of a cache.
-    postings = assemble_posting_blocks(flat, config).persist()
 
     return BM25Index(
         doc_map=doc_map,
@@ -737,10 +652,27 @@ def index_from_term_frequencies(
         postings=postings,
         n_docs=n_docs,
         avg_doc_len=avg_doc_len,
-        total_postings=total_postings,
+        total_postings=int(stats["total_postings"]),
         config=config,
         caches=tuple(pins),
     )
+
+
+def _avg_doc_len(stats: dict) -> float:
+    """float64 avg over the exact int64 token total — bit-equal to the
+    reference's float(np.mean(...)) for integer lengths (index.py:87)."""
+    n_docs = stats["n_docs"]
+    return float(stats["total_len"]) / n_docs if n_docs else 0.0
+
+
+# one row per (term_id, block_id): see schema.POSTINGS_SCHEMA
+_POSTING_BLOCK_DDL = (
+    "term_id long, block_id long, n_postings int, doc_ids_delta binary, "
+    "impacts_f32 binary, tfs binary, block_max float"
+)
+_POSTING_COLUMNS = [
+    "term_id", "block_id", "n_postings", "doc_ids_delta", "impacts_f32", "tfs", "block_max",
+]
 
 
 def assemble_posting_blocks(
@@ -765,7 +697,6 @@ def assemble_posting_blocks(
     partitions — the hash repartition guarantees that).
     """
     block_range = config.block_doc_range
-    sub = config.sub_block_size
     dtype = config.dtype
     np_dtype = np.float32 if dtype == "float32" else np.float64
 
@@ -776,11 +707,6 @@ def assemble_posting_blocks(
         )
         .repartition(parts, "term_id", "block_id")
         .sortWithinPartitions("term_id", "block_id", "doc_idx")
-    )
-
-    out_schema = (
-        "term_id long, block_id long, n_postings int, doc_ids_delta binary, "
-        "impacts_f32 binary, tfs binary, block_max float, sub_block_max array<float>"
     )
 
     def encode_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -800,7 +726,6 @@ def assemble_posting_blocks(
             for s, e in zip(starts, ends):
                 ids = ids_all[s:e]
                 imp = imp_all[s:e]
-                sbm = sub_block_maxes(imp, sub)
                 rows.append(
                     (
                         int(tid[s]),
@@ -810,16 +735,9 @@ def assemble_posting_blocks(
                         encode_impacts(imp, dtype),
                         encode_tfs(tf_all[s:e]),
                         float(imp.max()),
-                        sbm.tolist(),
                     )
                 )
-            return pd.DataFrame(
-                rows,
-                columns=[
-                    "term_id", "block_id", "n_postings", "doc_ids_delta",
-                    "impacts_f32", "tfs", "block_max", "sub_block_max",
-                ],
-            )
+            return pd.DataFrame(rows, columns=_POSTING_COLUMNS)
 
         for pdf in batches:
             if len(pdf) == 0:
@@ -838,7 +756,7 @@ def assemble_posting_blocks(
         if held is not None and len(held):
             yield emit(held)
 
-    return arranged.mapInPandas(encode_runs, schema=out_schema)
+    return arranged.mapInPandas(encode_runs, schema=_POSTING_BLOCK_DDL)
 
 
 def assemble_posting_blocks_collect(
@@ -847,7 +765,6 @@ def assemble_posting_blocks_collect(
     """Aggregation-based assembly (collect_list + sort_array) — kept as the
     reference plan for differential testing of the streaming encoder."""
     block_range = config.block_doc_range
-    sub = config.sub_block_size
     dtype = config.dtype
     np_dtype = np.float32 if dtype == "float32" else np.float64
 
@@ -870,11 +787,6 @@ def assemble_posting_blocks_collect(
         )
     )
 
-    out_schema = (
-        "term_id long, block_id long, n_postings int, doc_ids_delta binary, "
-        "impacts_f32 binary, tfs binary, block_max float, sub_block_max array<float>"
-    )
-
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -884,7 +796,6 @@ def assemble_posting_blocks_collect(
                 ids = np.asarray(doc_ids, dtype=np.int64)
                 imp = np.asarray(impacts, dtype=np_dtype)
                 tf_arr = np.asarray(tfs, dtype=np.int64)
-                sbm = sub_block_maxes(imp, sub)
                 rows.append(
                     (
                         term_id,
@@ -894,21 +805,8 @@ def assemble_posting_blocks_collect(
                         encode_impacts(imp, dtype),
                         encode_tfs(tf_arr),
                         float(imp.max()) if len(imp) else float("-inf"),
-                        sbm.tolist(),
                     )
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "term_id",
-                    "block_id",
-                    "n_postings",
-                    "doc_ids_delta",
-                    "impacts_f32",
-                    "tfs",
-                    "block_max",
-                    "sub_block_max",
-                ],
-            )
+            yield pd.DataFrame(rows, columns=_POSTING_COLUMNS)
 
-    return grouped.mapInPandas(encode, schema=out_schema)
+    return grouped.mapInPandas(encode, schema=_POSTING_BLOCK_DDL)

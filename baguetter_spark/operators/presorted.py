@@ -185,56 +185,6 @@ def presorted_keys(transcripts: DataFrame, layout: PartitionLayout) -> DataFrame
     return narrow.mapInPandas(assign, schema="doc_idx long, doc_id string")
 
 
-def presorted_exploded_terms(
-    transcripts: DataFrame, layout: PartitionLayout, config
-) -> DataFrame:
-    """Fused assign+tokenize: (conv_id, turn_idx, text) -> flat
-    (doc_idx, doc_len, term) in ONE Arrow pass with no shuffle — the
-    presorted counterpart of indexer.exploded_terms (same output contract).
-    """
-    from baguetter_spark.functions.preprocess import process_series
-
-    pre = config.preprocessor
-    narrow = transcripts.select("conv_id", "turn_idx", "text").withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    b_off = transcripts.sparkSession.sparkContext.broadcast(
-        (layout.offsets, layout.counts)
-    )
-
-    def tok_assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local = 0
-        pid = None
-        off, cnts = b_off.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pid = int(pdf["__pid"].iloc[0])
-            start = off[pid] + local
-            local += len(pdf)
-            toks = process_series(pdf["text"], pre)
-            lens = toks.map(len).to_numpy(dtype=np.int64)
-            row_idx = np.arange(start, start + len(pdf), dtype=np.int64)
-            doc_idx = np.repeat(row_idx, lens)
-            doc_len = np.repeat(lens, lens)
-            flat: list[str] = []
-            for lst in toks:
-                flat.extend(lst)
-            yield pd.DataFrame(
-                {"doc_idx": doc_idx, "doc_len": doc_len.astype(np.int32), "term": flat}
-            )
-        if pid is not None and local != cnts[pid]:
-            msg = (
-                f"presorted layout mismatch: partition {pid} saw {local} rows, "
-                f"expected {cnts[pid]} (nondeterministic input partitioning)"
-            )
-            raise RuntimeError(msg)
-
-    return narrow.mapInPandas(
-        tok_assign, schema="doc_idx long, doc_len int, term string"
-    )
-
-
 def presorted_local_tf(
     transcripts: DataFrame, layout: PartitionLayout, config
 ) -> DataFrame:

@@ -10,13 +10,13 @@ Design for scale: posting blocks are already split by doc range
 parallel across ranges — followed by a global per-query top-k.  Within a
 group the kernel is the MaxScore strategy (Turtle & Flood 1995 family):
 
-1. sort query terms by upper bound U_t = w_t * max-impact desc;
+1. sort query terms by upper bound U_t = w_t * max-impact desc (the max
+   over the term's postings in this range);
 2. term-at-a-time accumulation while the remaining suffix bound R could
    still create a NEW top-k doc;
 3. once R < θ (current k-th best), remaining terms can only update EXISTING
-   candidates — vectorized ``searchsorted`` lookups into the docID-sorted
-   posting arrays, sub-blocks outside the candidate doc range skipped via
-   the per-sub-block max/boundary metadata.
+   candidates — one vectorized ``searchsorted`` lookup per term into its
+   docID-sorted posting array.
 
 Rank safety: a doc first seen after the switch has final score <= R < θ <=
 final k-th score, so it cannot enter the top-k; retained candidates receive

@@ -48,8 +48,8 @@ VOCAB_SCHEMA = T.StructType(
 # Bounded row size + bounded shuffle groups at any scale (hot terms produce
 # many block rows instead of one unbounded row — this is the skew defense).
 # Arrays are docID-ascending within the row; doc_ids are delta+varint
-# compressed; impacts are raw little-endian float32 bytes.  Per sub-block
-# (sub_block_size postings) max impact supports block-max WAND.
+# compressed; impacts are raw little-endian float32 bytes; block_max (the
+# block's max impact) is the upper bound the pruned search paths read.
 POSTINGS_SCHEMA = T.StructType(
     [
         T.StructField("term_id", T.LongType(), False),
@@ -59,7 +59,6 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("impacts_f32", T.BinaryType(), False),
         T.StructField("tfs", T.BinaryType(), False),  # varint tf values (for merge/rebuild)
         T.StructField("block_max", T.FloatType(), False),
-        T.StructField("sub_block_max", T.ArrayType(T.FloatType()), False),
     ]
 )
 

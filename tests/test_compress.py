@@ -24,7 +24,6 @@ from baguetter_spark.compress import (
     encode_doc_ids,
     encode_impacts,
     encode_tfs,
-    sub_block_maxes,
     varint_decode,
     varint_encode,
 )
@@ -156,25 +155,3 @@ def test_tfs_roundtrip(vals):
     arr = np.array(vals, dtype=np.int64)
     out = decode_tfs(encode_tfs(arr), len(arr))
     np.testing.assert_array_equal(out, arr)
-
-
-# --------------------------------------------------------- block maxes
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    st.lists(st.floats(width=32, allow_nan=False, allow_infinity=False), min_size=0, max_size=200),
-    st.integers(min_value=1, max_value=64),
-)
-def test_sub_block_maxes_matches_chunked_max(vals, sb):
-    imp = np.array(vals, dtype=np.float32)
-    got = sub_block_maxes(imp, sb)
-    expected = [
-        float(np.max(imp[i : i + sb])) for i in range(0, len(imp), sb)
-    ]
-    assert got.dtype == np.float32
-    np.testing.assert_array_equal(got, np.array(expected, dtype=np.float32))
-    # upper-bound contract WAND relies on: every impact <= its block max
-    if len(imp):
-        idx = np.arange(len(imp)) // sb
-        assert (imp <= got[idx]).all()

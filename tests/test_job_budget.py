@@ -1,6 +1,7 @@
-"""Job budgets: the number of Spark jobs a build and an incremental add
-launch.  Jobs are the deterministic cost signal (wall time moves with the
-host); a change that adds a job to either path fails here."""
+"""Job budgets: the number of Spark jobs a build, a resumable build and an
+incremental add launch.  Jobs are the deterministic cost signal (wall time
+moves with the host); a change that adds a job to any of these paths fails
+here."""
 
 from __future__ import annotations
 
@@ -10,13 +11,18 @@ import pandas as pd
 
 from baguetter_spark.config import SparseIndexConfig, TextPreprocessorConfig
 from baguetter_spark.fixtures import gen_transcripts
-from baguetter_spark.io import load_index, save_index
+from baguetter_spark.io import build_index_resumable, load_index, save_index
 from baguetter_spark.operators.indexer import build_index
 
 BUILD_JOBS = 27
 # one reindex pass, measured at these settings; the segment build + removal
 # + merge composition it replaced took 76
 ADD_JOBS = 29
+
+# the resumable build runs build_index's stages with parquet checkpoints;
+# its own stats path (a doc_map aggregation and a closing df-sum) took 43
+RESUMABLE_JOBS = 39
+RESUMED_JOBS = 9
 
 _groups = itertools.count()
 
@@ -49,6 +55,18 @@ def test_build_job_budget(spark):
         idx.doc_map.count()
 
     assert count_jobs(spark, build) <= BUILD_JOBS
+
+
+def test_resumable_build_job_budget(spark, tmp_path):
+    """A fresh resumable build, then a re-run that resumes every stage."""
+    corpus = spark.createDataFrame(gen_transcripts(60, 8, seed=81, vocab_size=60))
+    workdir = str(tmp_path / "ckpt")
+
+    def build():
+        build_index_resumable(spark, corpus, _cfg(), workdir)
+
+    assert count_jobs(spark, build) <= RESUMABLE_JOBS
+    assert count_jobs(spark, build) <= RESUMED_JOBS
 
 
 def test_add_transcripts_job_budget(spark, tmp_path):

@@ -17,6 +17,7 @@ from baguetter_spark.io import (
     load_index,
     read_manifest,
     save_index,
+    write_manifest,
 )
 from baguetter_spark.merge import merge_indexes
 from baguetter_spark.operators.indexer import build_index
@@ -67,7 +68,7 @@ def test_resumable_build_skips_completed_stages(spark, corpus, tmp_path):
 
     idx1 = build_index_resumable(spark, sdf, cfg, workdir, input_id="c1")
     m = read_manifest(workdir)
-    assert m["stages_executed"] == ["stage_tf", "stage_doc_map", "stage_vocab", "stage_postings"]
+    assert m["stages_executed"] == ["stage_tf", "stage_vocab", "stage_doc_map", "stage_postings"]
     # per-partition lineage recorded
     sm = read_manifest(f"{workdir}/stage_postings")
     assert sm["status"] == "SUCCESS"
@@ -80,7 +81,6 @@ def test_resumable_build_skips_completed_stages(spark, corpus, tmp_path):
     assert set(m2["stages_skipped"]) == {
         "stage_tf",
         "stage_doc_map",
-        "stage_stats",
         "stage_vocab",
         "stage_postings",
     }
@@ -106,6 +106,59 @@ def test_resumable_build_skips_completed_stages(spark, corpus, tmp_path):
     assert _results_map(score_queries(loaded, q, top_k=5)) == base
 
 
+def test_resumable_build_equals_build_index(spark, corpus, tmp_path):
+    """The resumable build runs build_index's stage graph: a fresh run, a
+    fully resumed run and runs resumed after losing the postings (or the
+    vocab and postings) stages all give build_index's postings, doc_map,
+    vocab and stats.  A resumed vocab stage brings the corpus stats back
+    from its manifest."""
+    workdir = str(tmp_path / "ckpt")
+    sdf = spark.createDataFrame(corpus)
+    cfg = _cfg()
+    want = _index_rows(build_index(spark, sdf, cfg))
+
+    assert _index_rows(build_index_resumable(spark, sdf, cfg, workdir)) == want
+    vocab_manifest = read_manifest(f"{workdir}/stage_vocab")
+    assert vocab_manifest["stats"]["n_docs"] == len(corpus)
+    assert vocab_manifest["stats"]["total_postings"] == want["scalars"][2]
+
+    assert _index_rows(build_index_resumable(spark, sdf, cfg, workdir)) == want
+    assert read_manifest(workdir)["stages_executed"] == []
+
+    for lost in (["stage_postings"], ["stage_vocab", "stage_postings"]):
+        for stage in lost:
+            shutil.rmtree(f"{workdir}/{stage}")
+        assert _index_rows(build_index_resumable(spark, sdf, cfg, workdir)) == want
+        assert read_manifest(workdir)["stages_executed"] == lost
+
+
+def test_load_index_older_posting_format(spark, corpus, tmp_path):
+    """An index saved before the per-sub-block maxima were dropped (a
+    ``sub_block_max`` posting column, ``sub_block_size`` in the manifest's
+    config) still loads and searches the same."""
+    idx = build_index(spark, spark.createDataFrame(corpus), _cfg())
+    path = str(tmp_path / "old")
+    save_index(idx, path)
+    (
+        spark.read.parquet(f"{path}/postings")
+        .withColumn("sub_block_max", F.array("block_max"))
+        .write.parquet(f"{path}/postings_old")
+    )
+    shutil.rmtree(f"{path}/postings")
+    shutil.move(f"{path}/postings_old", f"{path}/postings")
+    manifest = read_manifest(path)
+    manifest["config"]["sub_block_size"] = 128
+    write_manifest(path, manifest)
+
+    loaded = load_index(spark, path)
+    assert loaded.config == idx.config
+    assert _index_rows(loaded) == _index_rows(idx)
+    q = _queries(spark)
+    assert _results_map(score_queries(loaded, q, top_k=5)) == _results_map(
+        score_queries(idx, q, top_k=5)
+    )
+
+
 def test_config_change_invalidates_stages(spark, corpus, tmp_path):
     workdir = str(tmp_path / "ckpt2")
     sdf = spark.createDataFrame(corpus)
@@ -116,7 +169,7 @@ def test_config_change_invalidates_stages(spark, corpus, tmp_path):
     build_index_resumable(spark, sdf, cfg2, workdir, input_id="c1")
     m = read_manifest(workdir)
     # all stages re-ran (different config hash)
-    assert m["stages_executed"] == ["stage_tf", "stage_doc_map", "stage_vocab", "stage_postings"]
+    assert m["stages_executed"] == ["stage_tf", "stage_vocab", "stage_doc_map", "stage_postings"]
 
 
 def test_merge_equals_rebuild(spark, tmp_path):
@@ -587,7 +640,7 @@ def test_add_transcripts_failure_leaves_state_intact(spark, monkeypatch):
 
 
 def test_resumable_build_releases_pins(spark, tmp_path):
-    """build_index_resumable's zipindex/build_vocab pins are parquet-backed
+    """build_index_resumable's zipindex and term-stats pins are parquet-backed
     garbage once the run finishes — they must be unpersisted, or a
     resumable-seeded maintenance chain leaks one set per build."""
     import gc

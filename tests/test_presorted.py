@@ -144,7 +144,6 @@ def test_stream_assembly_equals_collect(spark):
                 bytes(r["impacts_f32"]),
                 bytes(r["tfs"]),
                 r["block_max"],
-                tuple(r["sub_block_max"]),
             )
             for r in rows
         }
