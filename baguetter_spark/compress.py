@@ -51,28 +51,43 @@ def varint_encode(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
+# numpy scalars: comparing a uint8 array with a Python int costs several
+# microseconds of scalar conversion, which dominates small posting blocks
+_CONT = np.uint8(0x80)
+_PAYLOAD = np.uint8(0x7F)
+_SEVEN = np.uint64(7)
+
+
 def varint_decode(buf: bytes, count: int) -> np.ndarray:
-    """Decode ``count`` LEB128 varints into a uint64 array (vectorized)."""
-    if count == 0:
-        return np.empty(0, dtype=np.uint64)
+    """Decode ``count`` LEB128 varints into a uint64 array (vectorized).
+
+    Raises ``ValueError`` when the stream does not hold exactly ``count``
+    values, when its last byte still has the continuation bit set (a
+    truncated stream), or when a value runs past the 10 bytes a uint64
+    needs."""
     raw = np.frombuffer(buf, dtype=np.uint8)
-    cont = (raw & 0x80) != 0
+    if len(raw) == count and (count == 0 or raw.max() < _CONT):
+        # no byte has the continuation bit: the values are the bytes
+        return raw.astype(np.uint64)
+    cont = raw >= _CONT
+    if len(raw) and cont[-1]:
+        msg = "varint stream is truncated: its last byte has the continuation bit set"
+        raise ValueError(msg)
     # value-end positions: bytes with continuation bit clear
     ends = np.flatnonzero(~cont)
-    assert len(ends) == count, f"varint stream has {len(ends)} values, expected {count}"
+    if len(ends) != count:
+        msg = f"varint stream has {len(ends)} values, expected {count}"
+        raise ValueError(msg)
     starts = np.empty(count, dtype=np.int64)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
-    payload = (raw & 0x7F).astype(np.uint64)
+    lengths = ends - starts + 1
+    if lengths.max() > 10:
+        msg = "varint value longer than 10 bytes"
+        raise ValueError(msg)
     # shift amount of each byte within its value = (index - value_start) * 7
-    value_id = np.zeros(len(raw), dtype=np.int64)
-    value_id[starts[1:]] = 1
-    value_id = np.cumsum(value_id)
-    shifts = ((np.arange(len(raw)) - starts[value_id]) * 7).astype(np.uint64)
-    contrib = payload << shifts
-    out = np.zeros(count, dtype=np.uint64)
-    np.add.at(out, value_id, contrib)
-    return out
+    shifts = (np.arange(len(raw)) - starts.repeat(lengths)).astype(np.uint64) * _SEVEN
+    return np.add.reduceat((raw & _PAYLOAD).astype(np.uint64) << shifts, starts)
 
 
 def encode_doc_ids(doc_ids: np.ndarray) -> bytes:
@@ -90,8 +105,7 @@ def encode_doc_ids(doc_ids: np.ndarray) -> bytes:
 
 
 def decode_doc_ids(buf: bytes, count: int) -> np.ndarray:
-    deltas = varint_decode(buf, count).astype(np.int64)
-    return np.cumsum(deltas)
+    return varint_decode(buf, count).astype(np.int64).cumsum()
 
 
 def encode_impacts(impacts: np.ndarray, dtype: str = "float32") -> bytes:

@@ -1,26 +1,39 @@
-"""Batch top-k search: broadcast query scatter over posting blocks + gather.
+"""Batch top-k search: broadcast query scatter over posting blocks + one
+grouped block kernel.
 
 Re-expresses the reference query path (`baguetter/indices/sparse/base.py:
 417-536`, numba kernel `models/bm25/index.py:150-185`, top-k
-`utils/numpy_utils.py:46-73`) as ONE Spark job for a whole query batch
-(the reference's `search_many` thread pool becomes partition parallelism):
+`utils/numpy_utils.py:46-73`) as one plan per query batch (the reference's
+`search_many` thread pool becomes partition parallelism):
 
-    queries -> tokenize (same UDF as docs) -> posexplode (tok order kept)
+    queries -> tokenize once (same UDF as docs) -> posexplode_outer
+               (token order kept; empty/null token lists dropped)
             -> vocab join (OOV silently dropped; duplicates kept)   [Q2]
             -> broadcast-join onto posting blocks on term_id        [scatter]
-            -> decode blocks, per-batch partial aggregation         [Q3]
-            -> groupBy(query_id, doc_idx) final sum                 [gather]
-            -> per-query window top-k (score desc, doc_idx asc)     [Q4]
+            -> groupBy(query_id, block_id).applyInPandas: decode the
+               group's blocks, score its doc range, local top-k     [Q3]
+            -> per-query row_number window top-k
+               (score desc, doc_idx asc)                            [Q4]
             -> doc_map join -> doc_id                               [Q5]
             [-> query-count normalization]                          [Q6]
 
-Two scoring modes:
-- ``parity=True`` (default): float32 accumulation in query-token order —
-  bit-identical scores to the reference kernel (scores[d] += impact * w is
-  order-sensitive in float32; SURVEY §4.2.2).  Contributions are gathered
-  per (query, doc) and folded in token order inside a pandas UDF.
-- ``parity=False``: JVM-side double-precision ``F.sum`` — the fast path for
-  100 TB serving, mathematically equal within 1e-7 relative.
+Doc-range blocks partition documents, so a doc's whole score lives in one
+(query_id, block_id) group: the group kernel's local top-k rows carry exact
+final scores, each group's memory is bounded by ``block_doc_range`` at any
+corpus size, and the global window only ranks <= k rows per group (Spark's
+WindowGroupLimit cuts them to k per partition before the shuffle).
+
+Scoring modes:
+- ``parity=True`` (default): the group kernel is the reference kernel
+  itself — a float32 accumulator over the block's doc range, updated
+  ``acc[ids] += impact * w`` in query-token order — so scores are
+  bit-identical to the reference (float32 addition is order-sensitive;
+  SURVEY §4.2.2).
+- ``pruned=True`` / ``"blockmax"``: the group kernel is the rank-safe
+  MaxScore kernel (wand.py), float64 arithmetic.
+- ``parity=False``: decode in one ``mapInPandas`` pass, then a JVM-side
+  double-precision ``F.sum`` per (query, doc) and the two-phase
+  ``per_query_topk`` — mathematically equal within 1e-7 relative.
 
 Tie handling: the reference's argpartition tie order is nondeterministic, so
 we define the canonical total order (score desc, doc_idx asc) — SURVEY §4.2.6.
@@ -53,6 +66,7 @@ def per_query_topk(
     *,
     id_col: str = "doc_idx",
     score_col: str = "score",
+    local_pass: bool = True,
 ) -> DataFrame:
     """(query_id, <id_col>, <score_col>) -> rows with rank <= top_k per
     query, canonical tie order (score desc, id asc).
@@ -67,6 +81,14 @@ def per_query_topk(
     batches of a partition into one bounded accumulator (k rows per query at
     any time) so the per-(query, partition) bound holds regardless of how
     many batches the partition yields.
+
+    ``local_pass=False`` skips the local phase for inputs that already hold
+    at most k rows per (query, doc-range block) — the output of the grouped
+    block kernels in :func:`score_queries`.  Spark plans the
+    ``row_number() <= k`` filter as a partial WindowGroupLimit before the
+    window's shuffle (for k up to
+    ``spark.sql.optimizer.windowGroupLimitThreshold``), which keeps the
+    bound without a second Python pass.
 
     NaN scores are DROPPED up front: the two phases would otherwise disagree
     (pandas sorts NaN last, Spark's descending window ranks NaN first), making
@@ -88,29 +110,38 @@ def per_query_topk(
         if acc is not None:
             yield acc
 
-    pruned = scores.mapInPandas(local_topk, schema=scores.schema)
+    if local_pass:
+        scores = scores.mapInPandas(local_topk, schema=scores.schema)
     w_rank = Window.partitionBy("query_id").orderBy(
         F.col(score_col).desc(), F.col(id_col).asc()
     )
-    return pruned.withColumn("rank", F.row_number().over(w_rank)).where(
+    return scores.withColumn("rank", F.row_number().over(w_rank)).where(
         F.col("rank") <= top_k
     )
 
 
 def tokenize_queries(index: BM25Index, queries: DataFrame) -> DataFrame:
-    """queries(query_id, text[, weight]) -> (query_id, tok_pos, term_id, weight,
-    n_tokens).  n_tokens counts IN-VOCAB tokens (reference normalizes by
-    len(token_ids) post-OOV-drop, base.py:438)."""
+    """queries(query_id, text[, weight, part]) -> (query_id, tok_pos, term_id,
+    weight, n_tokens).  n_tokens counts IN-VOCAB tokens (reference normalizes
+    by len(token_ids) post-OOV-drop, base.py:438).
+
+    The tokenize UDF runs once per query row.  ``posexplode`` would let
+    Spark infer a ``size(toks) > 0`` filter in front of the generator, which
+    evaluates the Python UDF a second time; ``posexplode_outer`` plus a null
+    filter drops the same empty/null token lists without it.  n_tokens is a
+    window count over the same rows (a grouped self-join would plan the whole
+    tokenize branch twice); callers that do not select it pay nothing, since
+    column pruning removes the window."""
     tokenize = tokens_udf(index.config.preprocessor)
     has_weight = "weight" in queries.columns
     has_part = "part" in queries.columns
     q = queries.withColumn("toks", tokenize(F.col("text")))
     q = q.select(
         "query_id",
-        F.posexplode("toks").alias("tok_pos", "term"),
+        F.posexplode_outer("toks").alias("tok_pos", "term"),
         *([F.col("weight")] if has_weight else [F.lit(None).cast("double").alias("weight")]),
         *([F.col("part")] if has_part else []),
-    )
+    ).where(F.col("term").isNotNull())
     if has_part:
         # search_weighted concatenates sub-queries (base.py:516-520): global
         # token order = (sub-query order, token order).  2^20 tokens/part cap.
@@ -120,8 +151,76 @@ def tokenize_queries(index: BM25Index, queries: DataFrame) -> DataFrame:
     # OOV dropped by the inner join; duplicates kept (one row per position).
     q = q.join(index.vocab.select("term", "term_id"), "term").drop("term")
     # in-vocab token count per query (for normalization)
-    counts = q.groupBy("query_id").agg(F.count("*").alias("n_tokens"))
-    return q.join(counts, "query_id")
+    return q.withColumn(
+        "n_tokens", F.count(F.lit(1)).over(Window.partitionBy("query_id"))
+    )
+
+
+_TOPK_SCHEMA = "query_id string, doc_idx long, score {}"
+
+
+def _decode_group(
+    pdf: pd.DataFrame, dtype: str
+) -> tuple[np.ndarray, list[np.ndarray], list[np.ndarray]]:
+    """Posting rows (one (query, block) group, or any batch of the scatter
+    join) -> (query-token weights, doc-id arrays, impact arrays), one entry
+    per row in row order.  The one posting decode of every search mode."""
+    weights = pdf["weight"].to_numpy()
+    doc_arrays = [
+        decode_doc_ids(buf, int(n))
+        for buf, n in zip(pdf["doc_ids_delta"], pdf["n_postings"])
+    ]
+    impact_arrays = [decode_impacts(buf, dtype) for buf in pdf["impacts_f32"]]
+    return weights, doc_arrays, impact_arrays
+
+
+def _group_frame(pdf: pd.DataFrame, ids: np.ndarray, scores: np.ndarray) -> pd.DataFrame:
+    qid = pdf["query_id"].iloc[0]
+    return pd.DataFrame(
+        {"query_id": np.full(len(ids), qid, dtype=object), "doc_idx": ids, "score": scores}
+    )
+
+
+def _parity_block_topk(k: int):
+    """The reference kernel (index.py:150-185) over one (query, block)
+    group, then the group's top-k in canonical order.
+
+    A float32 accumulator spans the block's doc ids and takes
+    ``acc[ids] += impact * w`` per posting row in query-token order — the
+    same float32 operations in the same order as the reference, so scores are
+    bit-identical (0.0f + x == x; each tok_pos occurs once per group, and ids
+    are unique within a row).  Candidates are the docs with at least one
+    posting, zero-sum docs included."""
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("tok_pos")
+        weights, doc_arrays, impact_arrays = _decode_group(pdf, "float32")
+        base = min(int(ids[0]) for ids in doc_arrays)
+        span = max(int(ids[-1]) for ids in doc_arrays) - base + 1
+        acc = np.zeros(span, dtype=np.float32)
+        hit = np.zeros(span, dtype=bool)
+        for w, ids, imp in zip(weights, doc_arrays, impact_arrays):
+            local = ids - base
+            acc[local] += imp * np.float32(w)
+            hit[local] = True
+        docs = np.flatnonzero(hit)
+        scores = acc[docs]
+        keep = np.lexsort((docs, -scores))[:k]
+        return _group_frame(pdf, docs[keep] + base, scores[keep])
+
+    return kernel
+
+
+def _maxscore_block_topk(k: int, dtype: str):
+    """The rank-safe MaxScore kernel (wand.py) over one (query, block)
+    group: its <= k exact-scored local candidates."""
+    from baguetter_spark.operators.wand import maxscore_topk
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids, scores = maxscore_topk(*_decode_group(pdf, dtype), k)
+        return _group_frame(pdf, ids, scores)
+
+    return kernel
 
 
 def score_queries(
@@ -191,7 +290,7 @@ def score_queries(
         "tok_pos",
         "term_id",
         F.coalesce(F.col("weight"), F.lit(1.0)).cast("float").alias("weight"),
-        "n_tokens",
+        *(["n_tokens"] if normalize else []),
     )
 
     # --- scatter: broadcast the (small) query-term table to posting blocks ---
@@ -221,25 +320,8 @@ def score_queries(
         # one (query_id, block_id) group: run the MaxScore kernel per group
         # (bounded memory, parallel across ranges), emit exact-scored local
         # top-k candidates, take the global top-k of the union.
-        from baguetter_spark.operators.wand import maxscore_topk
-
-        dt = dtype
-        k = top_k
-
-        def local_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-            qid = pdf["query_id"].iloc[0]
-            weights = pdf["weight"].to_numpy(dtype=np.float64)
-            doc_arrays = [
-                decode_doc_ids(buf, int(n))
-                for buf, n in zip(pdf["doc_ids_delta"], pdf["n_postings"])
-            ]
-            impact_arrays = [decode_impacts(buf, dt) for buf in pdf["impacts_f32"]]
-            ids, sc = maxscore_topk(weights, doc_arrays, impact_arrays, k)
-            return pd.DataFrame(
-                {"query_id": np.full(len(ids), qid, dtype=object), "doc_idx": ids, "score": sc}
-            )
-
-        topk_schema = "query_id string, doc_idx long, score double"
+        local_topk = _maxscore_block_topk(top_k, dtype)
+        topk_schema = _TOPK_SCHEMA.format("double")
         if pruned == "blockmax":
             # --- phase 0: per-(query, block) upper bounds from block_max
             # metadata.  Narrow projection — parquet column pruning keeps the
@@ -312,56 +394,9 @@ def score_queries(
         if dtype != "float32":
             msg = "parity mode requires dtype='float32' (the reference's default)"
             raise ValueError(msg)
-        contrib_schema = "query_id string, doc_idx long, tok_pos int, contrib float"
-
-        def decode_contribs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                qids, docs, poss, contribs = [], [], [], []
-                for qid, pos, w, n, ids_buf, imp_buf in zip(
-                    pdf["query_id"], pdf["tok_pos"], pdf["weight"], pdf["n_postings"],
-                    pdf["doc_ids_delta"], pdf["impacts_f32"],
-                ):
-                    ids = decode_doc_ids(ids_buf, n)
-                    imp = decode_impacts(imp_buf)  # f32 (guarded above)
-                    if w != 1.0:
-                        # reference: data * token_weight in float32 (index.py:184)
-                        imp = imp * np.float32(w)
-                    qids.append(np.full(n, qid, dtype=object))
-                    docs.append(ids)
-                    poss.append(np.full(n, pos, dtype=np.int32))
-                    contribs.append(imp)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(qids),
-                        "doc_idx": np.concatenate(docs),
-                        "tok_pos": np.concatenate(poss),
-                        "contrib": np.concatenate(contribs),
-                    }
-                )
-
-        contribs = joined.mapInPandas(decode_contribs, schema=contrib_schema)
-
-        # gather: fold contributions per (query, doc) in token order, float32
-        gathered = contribs.groupBy("query_id", "doc_idx").agg(
-            F.sort_array(F.collect_list(F.struct("tok_pos", "contrib"))).alias(
-                "contrib_list"
-            )
-        )
-
-        @F.pandas_udf("float")
-        def fold_f32(cl: pd.Series) -> pd.Series:
-            out = np.empty(len(cl), dtype=np.float32)
-            for i, lst in enumerate(cl):
-                acc = np.float32(0.0)
-                for item in lst:
-                    acc = np.float32(acc + np.float32(item["contrib"]))
-                out[i] = acc
-            return pd.Series(out)
-
-        scores = gathered.select(
-            "query_id", "doc_idx", fold_f32("contrib_list").alias("score")
+        # one grouped pass: decode, float32 fold in token order, local top-k
+        scores = joined.groupBy("query_id", "block_id").applyInPandas(
+            _parity_block_topk(top_k), schema=_TOPK_SCHEMA.format("float")
         )
     else:
         # fast path: per-batch local aggregation in numpy, then JVM double sum
@@ -371,24 +406,20 @@ def score_queries(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                acc: dict[str, dict] = {}
-                qids, docs, contribs = [], [], []
-                for qid, w, n, ids_buf, imp_buf in zip(
-                    pdf["query_id"], pdf["weight"], pdf["n_postings"],
-                    pdf["doc_ids_delta"], pdf["impacts_f32"],
-                ):
-                    ids = decode_doc_ids(ids_buf, n)
-                    imp = decode_impacts(imp_buf, dtype).astype(np.float64)
-                    if w != 1.0:
-                        imp = imp * float(w)
-                    qids.append(np.full(n, qid, dtype=object))
-                    docs.append(ids)
-                    contribs.append(imp)
+                weights, doc_arrays, impact_arrays = _decode_group(pdf, dtype)
                 pout = pd.DataFrame(
                     {
-                        "query_id": np.concatenate(qids),
-                        "doc_idx": np.concatenate(docs),
-                        "partial": np.concatenate(contribs),
+                        "query_id": np.repeat(
+                            pdf["query_id"].to_numpy(dtype=object),
+                            pdf["n_postings"].to_numpy(),
+                        ),
+                        "doc_idx": np.concatenate(doc_arrays),
+                        "partial": np.concatenate(
+                            [
+                                imp.astype(np.float64) * float(w)
+                                for w, imp in zip(weights, impact_arrays)
+                            ]
+                        ),
                     }
                 )
                 # local combine: shrinks shuffle volume for duplicate terms
@@ -403,7 +434,8 @@ def score_queries(
         scores = partials.groupBy("query_id", "doc_idx").agg(score_col.alias("score"))
 
     # --- per-query top-k (canonical tie order) + doc_id remap --------------
-    topk = per_query_topk(scores, top_k).join(
+    # the grouped block kernels already emit <= k rows per (query, block)
+    topk = per_query_topk(scores, top_k, local_pass=not (pruned or parity)).join(
         index.doc_map.select("doc_idx", "doc_id"), "doc_idx"
     )
 
@@ -514,8 +546,6 @@ def blockmax_skip_stats(
     block_doc_range to reach the multi-block regime a 10^12-doc corpus
     lives in.  Diagnostic only: the serving path in ``score_queries`` is
     untouched."""
-    from baguetter_spark.operators.wand import maxscore_topk
-
     qterms = tokenize_queries(index, queries).select(
         "query_id",
         "term_id",
@@ -539,26 +569,13 @@ def blockmax_skip_stats(
     joined = postings.join(F.broadcast(qterms), "term_id").select(
         "query_id", "block_id", "weight", "n_postings", "doc_ids_delta", "impacts_f32"
     )
-    dt = index.config.dtype
-    k = top_k
-
-    def local_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = pdf["query_id"].iloc[0]
-        weights = pdf["weight"].to_numpy(dtype=np.float64)
-        doc_arrays = [
-            decode_doc_ids(buf, int(n))
-            for buf, n in zip(pdf["doc_ids_delta"], pdf["n_postings"])
-        ]
-        impact_arrays = [decode_impacts(buf, dt) for buf in pdf["impacts_f32"]]
-        ids, sc = maxscore_topk(weights, doc_arrays, impact_arrays, k)
-        return pd.DataFrame(
-            {"query_id": np.full(len(ids), qid, dtype=object), "doc_idx": ids, "score": sc}
-        )
-
     cand_a = (
         joined.join(F.broadcast(probe), ["query_id", "block_id"])
         .groupBy("query_id", "block_id")
-        .applyInPandas(local_topk, schema="query_id string, doc_idx long, score double")
+        .applyInPandas(
+            _maxscore_block_topk(top_k, index.config.dtype),
+            schema=_TOPK_SCHEMA.format("double"),
+        )
     )
     wk = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("doc_idx").asc())
     theta = (

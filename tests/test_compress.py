@@ -95,9 +95,32 @@ def test_varint_empty():
 
 
 def test_varint_count_mismatch_raises():
+    # ValueError, not assert: python -O strips asserts
     buf = varint_encode(np.array([1, 2, 3], dtype=np.uint64))
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError, match="expected 2"):
         varint_decode(buf, 2)
+    with pytest.raises(ValueError, match="expected 4"):
+        varint_decode(buf, 4)
+    # multi-byte values take the general path
+    buf = varint_encode(np.array([300, 2, 70000], dtype=np.uint64))
+    with pytest.raises(ValueError, match="expected 2"):
+        varint_decode(buf, 2)
+    with pytest.raises(ValueError, match="expected 0"):
+        varint_decode(buf, 0)
+
+
+def test_varint_truncated_stream_raises():
+    buf = varint_encode(np.array([5, 300, 70000], dtype=np.uint64))
+    # cut inside the last value: its final byte still has the continuation bit
+    with pytest.raises(ValueError, match="truncated"):
+        varint_decode(buf[:-1], 3)
+    with pytest.raises(ValueError, match="truncated"):
+        varint_decode(buf[:-1], 2)
+    with pytest.raises(ValueError, match="expected 1"):
+        varint_decode(b"", 1)
+    # a run of continuation bytes longer than any uint64 needs
+    with pytest.raises(ValueError, match="10 bytes"):
+        varint_decode(b"\x80" * 11 + b"\x01", 1)
 
 
 # ---------------------------------------------------------------- doc ids

@@ -1,18 +1,20 @@
-"""Job budgets: the number of Spark jobs a build, a resumable build and an
-incremental add launch.  Jobs are the deterministic cost signal (wall time
-moves with the host); a change that adds a job to any of these paths fails
-here."""
+"""Job budgets: the number of Spark jobs a build, a resumable build, an
+incremental add and a parity search launch.  Jobs are the deterministic cost
+signal (wall time moves with the host); a change that adds a job to any of
+these paths fails here."""
 
 from __future__ import annotations
 
 import itertools
 
 import pandas as pd
+import pytest
 
 from baguetter_spark.config import SparseIndexConfig, TextPreprocessorConfig
-from baguetter_spark.fixtures import gen_transcripts
+from baguetter_spark.fixtures import gen_queries, gen_transcripts
 from baguetter_spark.io import build_index_resumable, load_index, save_index
 from baguetter_spark.operators.indexer import build_index
+from baguetter_spark.operators.search import score_queries
 
 BUILD_JOBS = 27
 # one reindex pass, measured at these settings; the segment build + removal
@@ -23,6 +25,13 @@ ADD_JOBS = 29
 # its own stats path (a doc_map aggregation and a closing df-sum) took 43
 RESUMABLE_JOBS = 39
 RESUMED_JOBS = 9
+
+# one grouped (query, block) kernel and a single tokenize pass, measured at
+# these settings; the decode + collect_list gather + fold + local top-k plan
+# it replaced took 9 in memory and 14 on a reloaded index
+SEARCH_JOBS = 6
+# a reloaded index adds the term-id pushdown collect and the parquet reads
+LOADED_SEARCH_JOBS = 9
 
 _groups = itertools.count()
 
@@ -87,3 +96,32 @@ def test_add_transcripts_job_budget(spark, tmp_path):
 
     assert count_jobs(spark, lambda: eng.add_transcripts(delta)) <= ADD_JOBS
     assert eng.index.n_docs == len(base) + len(fresh)
+
+
+@pytest.fixture(scope="module")
+def search_setup(spark):
+    corpus = spark.createDataFrame(gen_transcripts(60, 8, seed=81, vocab_size=60))
+    index = build_index(spark, corpus, _cfg())
+    index.postings.count()
+    index.doc_map.count()
+    queries = spark.createDataFrame(
+        gen_queries(10, seed=5, vocab_size=60)[["query_id", "text"]]
+    )
+    return index, queries
+
+
+def test_parity_search_job_budget(spark, search_setup):
+    """A 10-query parity batch over the in-memory index."""
+    index, queries = search_setup
+    jobs = count_jobs(spark, lambda: score_queries(index, queries, top_k=10).collect())
+    assert jobs <= SEARCH_JOBS
+
+
+def test_parity_search_reloaded_job_budget(spark, search_setup, tmp_path):
+    """The same batch over the index saved and reloaded (term-id pushdown
+    into the parquet scan)."""
+    index, queries = search_setup
+    save_index(index, str(tmp_path / "idx"))
+    loaded = load_index(spark, str(tmp_path / "idx"))
+    jobs = count_jobs(spark, lambda: score_queries(loaded, queries, top_k=10).collect())
+    assert jobs <= LOADED_SEARCH_JOBS

@@ -11,7 +11,9 @@ each guarded property is worth orders of magnitude at the 100 TB target:
    post-scan filter over the full index);
 3. IVF pretrained assignment — cell assignment is a map-side broadcast
    argmax: no Exchange hash-partitioned by ``vec_id`` anywhere in the plan
-   (the shape the old crossJoin+row_number window plan required).
+   (the shape the old crossJoin+row_number window plan required);
+4. parity search — the query tokenize UDF is evaluated once and the
+   float32 fold is the grouped block kernel, not a ``collect_list`` gather.
 """
 
 from __future__ import annotations
@@ -91,6 +93,22 @@ def test_search_term_filter_reaches_parquet_scan(spark, loaded_index):
     m = re.search(r"PushedFilters:\s*\[([^\]]*)\]", plan)
     assert m is not None, plan[:3000]
     assert "term_id" in m.group(1), m.group(0)
+
+
+def test_parity_search_tokenizes_once_without_gather(spark, loaded_index):
+    from baguetter_spark.operators.search import score_queries
+
+    queries = spark.createDataFrame(
+        pd.DataFrame(
+            {"query_id": ["q0", "q1"], "text": ["term00001 term00002", "term00003"]}
+        )
+    )
+    plan = _executed(score_queries(loaded_index, queries, top_k=5))
+    # an inferred size(toks) > 0 filter or a self-joined token count would
+    # each plan the Python tokenize UDF again
+    assert len(re.findall(r"ArrowEvalPython \[_tokenize\(", plan)) == 1, plan
+    assert "collect_list" not in plan, plan
+    assert "FlatMapGroupsInPandas" in plan, plan
 
 
 def test_ivf_pretrained_assignment_is_map_side(spark):

@@ -218,3 +218,143 @@ def test_empty_query_reference_mode(spark):
     ok = sorted(by_q["qok"], key=lambda r: r["rank"])
     scores = [float(r["score"]) for r in ok]
     assert scores == sorted(scores, reverse=True)
+
+
+# ------------------------------------------------ multi-block differential
+
+# (query_id, [(text, weight), ...]): sub-queries concatenate in part order
+MULTIBLOCK_QUERIES = [
+    ("q_plain", [("term00002 hot3 term00011 term00005", 1.0)]),
+    ("q_dup", [("term00003 term00003 term00007 term00003", 1.0)]),
+    ("q_hot", [("hot1 hot2 hot1 the", 1.0)]),
+    (
+        "q_parts",
+        [
+            ("term00001 term00002 hot4", 2.5),
+            ("term00004 term00001", -0.75),
+            ("term00009 zzoov", 0.3),
+        ],
+    ),
+    ("q_neg", [("term00006 hot5", -1.5)]),
+]
+# no in-vocab token: empty text, null text, all stopwords, all OOV
+EMPTY_QUERIES = [
+    ("q_empty", [("", 1.0)]),
+    ("q_null", [(None, 1.0)]),
+    ("q_stop", [("the and of is", 1.0)]),
+    ("q_oov", [("zzqx1 zzqx2", 1.0)]),
+]
+
+
+@pytest.fixture(scope="module")
+def multiblock(spark):
+    """Default preprocessor (stopwords + stemmer) at block_doc_range=16:
+    ~70 docs spread over 5 doc-range blocks, so every query's score is
+    folded in several (query, block) groups."""
+    cfg = SparseIndexConfig(block_doc_range=16)
+    corpus = gen_transcripts(70, 9, seed=23, vocab_size=60)
+    ordered = corpus.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    keys = [f"{c}:{t}" for c, t in zip(ordered["conv_id"], ordered["turn_idx"])]
+    oracle = OracleBM25Index(cfg).add_many(keys, list(ordered["text"]))
+    engine = BM25SparkIndex(spark, cfg).build(spark.createDataFrame(corpus))
+    rows = [
+        (qid, part, text, weight)
+        for qid, parts in MULTIBLOCK_QUERIES + EMPTY_QUERIES
+        for part, (text, weight) in enumerate(parts)
+    ]
+    qdf = spark.createDataFrame(
+        rows, "query_id string, part int, text string, weight double"
+    )
+    key_to_idx = {k: i for i, k in oracle.key_mapping.items()}
+    return engine.index, oracle, qdf, key_to_idx
+
+
+def oracle_multiblock_topk(oracle, parts, k, normalize):
+    """Canonical (score desc, doc_idx asc) top-k over every doc with at
+    least one posting of the query, scored by the reference kernel — the
+    engine's candidate set, zero and negative sums included."""
+    ids: list[int] = []
+    weights: list[float] = []
+    for text, w in parts:
+        tids = oracle.to_token_ids(oracle._process(text or ""))
+        ids.extend(int(t) for t in tids)
+        weights.extend([w] * len(tids))
+    idx = oracle.index
+    token_ids = np.array(ids, dtype=np.int64)
+    dense = oracle_calculate_scores_dense(
+        idx, token_ids, np.array(weights, dtype=np.float32)
+    )
+    docs = np.unique(
+        np.concatenate(
+            [np.empty(0, dtype=np.int64)]
+            + [idx.doc_indices[idx.col_pointers[t] : idx.col_pointers[t + 1]] for t in ids]
+        )
+    ).astype(np.int64)
+    top = docs[np.lexsort((docs, -dense[docs].astype(np.float64)))][:k]
+    scores = dense[top]
+    if normalize:
+        scores = oracle._normalize(len(ids), scores)
+    return list(top), list(scores)
+
+
+def _by_query(rows):
+    out: dict[str, list] = {}
+    for r in rows:
+        out.setdefault(r["query_id"], []).append(r)
+    return {q: sorted(rs, key=lambda r: r["rank"]) for q, rs in out.items()}
+
+
+@pytest.mark.parametrize(
+    ("top_k", "normalize"), [(10, False), (10, True), (200, False)]
+)
+def test_parity_multiblock_matches_oracle(spark, multiblock, top_k, normalize):
+    """Parity top-k equals the reference bit for bit at a multi-block
+    layout: duplicate tokens, weighted sub-queries (one negative weight),
+    normalization and top_k > n_docs.  Queries without an in-vocab token
+    return no rows."""
+    from baguetter_spark.operators.search import score_queries
+
+    index, oracle, qdf, key_to_idx = multiblock
+    assert index.n_docs > 4 * 16
+    assert (top_k > index.n_docs) == (top_k == 200)
+    got = _by_query(
+        score_queries(index, qdf, top_k=top_k, normalize=normalize).collect()
+    )
+    for qid, parts in MULTIBLOCK_QUERIES:
+        exp_idx, exp_scores = oracle_multiblock_topk(oracle, parts, top_k, normalize)
+        rows = got.get(qid, [])
+        assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
+        assert [key_to_idx[r["doc_id"]] for r in rows] == exp_idx, qid
+        assert [np.float32(r["score"]) for r in rows] == exp_scores, qid
+    for qid, _ in EMPTY_QUERIES:
+        assert qid not in got, (qid, got[qid])
+
+
+@pytest.mark.parametrize("top_k", [10, 200])
+def test_parity_multiblock_reference_padding(spark, multiblock, top_k):
+    """empty_query="reference": every query, empty ones included, returns
+    min(k, n_docs) rows; a query without an in-vocab token gets zero-score
+    pads, the lowest doc ids in order."""
+    from baguetter_spark.operators.search import score_queries
+
+    index, oracle, qdf, key_to_idx = multiblock
+    m = min(top_k, index.n_docs)
+    got = _by_query(
+        score_queries(index, qdf, top_k=top_k, empty_query="reference").collect()
+    )
+    for qid, parts in MULTIBLOCK_QUERIES:
+        rows = got[qid]
+        assert [r["rank"] for r in rows] == list(range(1, m + 1)), qid
+        if any(w < 0 for _, w in parts):
+            continue  # zero-score pads outrank negative sums
+        # every matched doc ranks above the pads, with its reference score
+        exp_idx, exp_scores = oracle_multiblock_topk(oracle, parts, top_k, False)
+        head = rows[: len(exp_idx)]
+        assert [key_to_idx[r["doc_id"]] for r in head] == exp_idx, qid
+        assert [np.float32(r["score"]) for r in head] == exp_scores, qid
+        assert all(float(r["score"]) == 0.0 for r in rows[len(exp_idx) :]), qid
+    for qid, _ in EMPTY_QUERIES:
+        rows = got[qid]
+        assert [r["rank"] for r in rows] == list(range(1, m + 1)), qid
+        assert all(float(r["score"]) == 0.0 for r in rows), qid
+        assert [key_to_idx[r["doc_id"]] for r in rows] == list(range(m)), qid
