@@ -160,6 +160,9 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, np.ndarray]:
             pos += 1
             continue
         marker = payload[pos + 1]
+        if marker == 0xFF:  # fill byte before a marker (T.81 B.1.1.2): rescan
+            pos += 1
+            continue
         pos += 2
         if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
             continue

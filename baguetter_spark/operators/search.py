@@ -32,8 +32,8 @@ Scoring modes:
 - ``pruned=True`` / ``"blockmax"``: the group kernel is the rank-safe
   MaxScore kernel (wand.py), float64 arithmetic.
 - ``parity=False``: decode in one ``mapInPandas`` pass, then a JVM-side
-  double-precision ``F.sum`` per (query, doc) and the two-phase
-  ``per_query_topk`` — mathematically equal within 1e-7 relative.
+  double-precision ``F.sum`` per (query, doc) and ``per_query_topk`` —
+  mathematically equal within 1e-7 relative.
 
 Tie handling: the reference's argpartition tie order is nondeterministic, so
 we define the canonical total order (score desc, doc_idx asc) — SURVEY §4.2.6.
@@ -66,7 +66,6 @@ def per_query_topk(
     *,
     id_col: str = "doc_idx",
     score_col: str = "score",
-    local_pass: bool = True,
 ) -> DataFrame:
     """(query_id, <id_col>, <score_col>) -> rows with rank <= top_k per
     query, canonical tie order (score desc, id asc).
@@ -77,18 +76,15 @@ def per_query_topk(
     candidates, which is a guaranteed straggler/OOM at scale.  The local
     phase bounds the window's input to k rows per (query, partition); it is
     rank-safe because any global top-k row is also in its own partition's
-    top-k under the same total order.  The local pruner folds ALL Arrow
-    batches of a partition into one bounded accumulator (k rows per query at
-    any time) so the per-(query, partition) bound holds regardless of how
-    many batches the partition yields.
+    top-k under the same total order.
 
-    ``local_pass=False`` skips the local phase for inputs that already hold
-    at most k rows per (query, doc-range block) — the output of the grouped
-    block kernels in :func:`score_queries`.  Spark plans the
-    ``row_number() <= k`` filter as a partial WindowGroupLimit before the
-    window's shuffle (for k up to
-    ``spark.sql.optimizer.windowGroupLimitThreshold``), which keeps the
-    bound without a second Python pass.
+    For k up to ``spark.sql.optimizer.windowGroupLimitThreshold`` (default
+    1000) Spark itself plans the ``row_number() <= k`` filter as a partial
+    WindowGroupLimit before the window's shuffle, so the local phase is the
+    JVM's.  Above it, a ``mapInPandas`` pass takes its place: it folds ALL
+    Arrow batches of a partition into one bounded accumulator (k rows per
+    query at any time), so the bound holds however many batches the
+    partition yields.
 
     NaN scores are DROPPED up front: the two phases would otherwise disagree
     (pandas sorts NaN last, Spark's descending window ranks NaN first), making
@@ -110,7 +106,10 @@ def per_query_topk(
         if acc is not None:
             yield acc
 
-    if local_pass:
+    threshold = scores.sparkSession.conf.get(
+        "spark.sql.optimizer.windowGroupLimitThreshold", "1000"
+    )
+    if top_k > int(threshold):
         scores = scores.mapInPandas(local_topk, schema=scores.schema)
     w_rank = Window.partitionBy("query_id").orderBy(
         F.col(score_col).desc(), F.col(id_col).asc()
@@ -434,8 +433,7 @@ def score_queries(
         scores = partials.groupBy("query_id", "doc_idx").agg(score_col.alias("score"))
 
     # --- per-query top-k (canonical tie order) + doc_id remap --------------
-    # the grouped block kernels already emit <= k rows per (query, block)
-    topk = per_query_topk(scores, top_k, local_pass=not (pruned or parity)).join(
+    topk = per_query_topk(scores, top_k).join(
         index.doc_map.select("doc_idx", "doc_id"), "doc_idx"
     )
 
@@ -563,7 +561,7 @@ def blockmax_skip_stats(
         .agg(F.sum("ubc").alias("ub"))
     )
     wb = Window.partitionBy("query_id").orderBy(F.desc("ub"), F.col("block_id").asc())
-    ub = ub.withColumn("brank", F.row_number().over(wb)).persist()
+    ub = ub.withColumn("brank", F.row_number().over(wb))
 
     probe = ub.where(F.col("brank") <= probe_blocks).select("query_id", "block_id")
     joined = postings.join(F.broadcast(qterms), "term_id").select(

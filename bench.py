@@ -1,4 +1,4 @@
-"""Per-round benchmark: headline index-build + search timings.
+"""Headline benchmark: index-build + search timings.
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -6,10 +6,14 @@ Prints ONE JSON line:
 
 Inputs: $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) documents table +
 a deterministic synthetic transcripts corpus (FIXTURES.md §1; cached parquet
-under .bench_cache/).  $SPARK_GRAFT_CPUS controls local[N] (default 32).
+under .bench_cache/), $BENCH_TURNS turns (default 120000).  $SPARK_GRAFT_CPUS
+controls local[N] (default 32); $BENCH_REPS repeats the suite (default 2).
+The driver heap is min(24 GiB, half of host RAM).
 
-Scaling-efficiency evidence (north rule: >=0.8 from N to 4N executors) is
-produced by scripts/bench_scaling.py and recorded in BENCH/BASELINE.md.
+This is the headline run, not the regression signal: that is perfbench
+(``python3 perfbench/run.py``, deterministic per-call counters).  The N vs 4N
+scaling check (north rule: >= 0.8) is two runs of this script, pinned to 1 and
+4 cores, comparing ``turns_per_sec_sorted`` (README "Benchmarks").
 """
 
 from __future__ import annotations
@@ -40,58 +44,29 @@ def get_transcripts_path() -> str:
 
         t0 = time.time()
         pdf = gen_transcripts(N_TURNS, seed=42, vocab_size=20_000)
-        # many row groups = realistic sorted-table layout (presorted path
-        # needs populated scan splits; see scripts/bench_scaling.py)
+        # many row groups = realistic sorted-table layout (the presorted
+        # path needs populated scan splits)
         pdf.to_parquet(path, index=False, row_group_size=15_000)
         log(f"generated {N_TURNS} synthetic turns in {time.time()-t0:.1f}s")
     return path
 
 
-def wait_for_clean_window(max_wait_s: float) -> dict | None:
-    """Delay the measured run until a probe-clean weather window (README
-    "Benchmark weather protocol"), bounded by ``max_wait_s`` — after the
-    deadline the bench runs regardless (a run is always produced).  Only
-    the START window is picked; nothing about the measurement changes.
-    Returns the last probe reading (annotated into the output JSON), or
-    None when probing is disabled/unavailable."""
-    if max_wait_s <= 0:
-        return None
-    try:
-        sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts"))
-        from bench_scaling import DEFAULT_GATE_BW, DEFAULT_GATE_FAULT, probes
-    except Exception:  # pragma: no cover - scripts/ not shipped alongside
-        return None
-    deadline = time.time() + max_wait_s
-    last = None
-    while True:
-        last = probes()
-        bw = last.get("agg_bw_gbps")
-        ok = last["fault_mbps"] >= DEFAULT_GATE_FAULT and (bw is None or bw >= DEFAULT_GATE_BW)
-        if ok:
-            return last
-        if time.time() >= deadline:
-            log(f"no clean weather window within {max_wait_s:.0f}s - running anyway ({last})")
-            return last
-        log(f"dirty weather window {last} - waiting")
-        time.sleep(20)
+def driver_memory_mb() -> int:
+    """Driver heap: 24 GiB, or half of host RAM if that is smaller."""
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return min(24 * 1024, host_mb // 2)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    probe_pre = wait_for_clean_window(
-        float(os.environ.get("BENCH_WAIT_CLEAN_SECONDS", "600"))
-    )
 
     from pyspark.sql import SparkSession
 
-    # Keep-memory-resident tuning (same as scripts/bench_scaling.py — see
-    # README "Benchmark weather protocol"): on this sandbox, pages returned
-    # to the OS are handed back to the host and refault at the throttled
-    # lazy-backing rate, so allocators must hold arenas.  Set before the
-    # JVM / Python workers are forked (they inherit the env); no-ops on a
-    # normal host beyond standard long-lived-executor tuning.
+    # Long-lived-executor allocator tuning: allocators hold their arenas
+    # instead of returning pages to the OS between stages.  Set before the
+    # JVM / Python workers are forked (they inherit the env).
     os.environ["MALLOC_TRIM_THRESHOLD_"] = "-1"
     os.environ["MALLOC_MMAP_THRESHOLD_"] = str(256 * 1024 * 1024)
     os.environ["ARROW_DEFAULT_MEMORY_POOL"] = "system"
@@ -101,8 +76,7 @@ def main() -> None:
         .appName("baguetter-spark-bench")
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .config("spark.driver.extraJavaOptions", "-Xms24g")
+        .config("spark.driver.memory", f"{driver_memory_mb()}m")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "-1")
         .config(
             "spark.executorEnv.MALLOC_MMAP_THRESHOLD_", str(256 * 1024 * 1024)
@@ -123,12 +97,8 @@ def main() -> None:
 
     # --- unmeasured warm-up: JVM codegen, Python worker pool, allocator ----
     # A long-lived cluster executor is warm; cold-start is not what the
-    # headline measures.  This matters doubly on this sandbox, where first
-    # touch of never-backed guest memory can run at single-digit MB/s
-    # (README "Benchmark weather protocol") — without a warm-up the first
-    # entry absorbs minutes of host-side page materialization.  A tiny
-    # build (2k synthetic turns) walks every stage: tokenizer UDF, zipindex,
-    # posting assembly, search kernels stay cold (warmed by their own size).
+    # headline measures.  A tiny build (2k synthetic turns) walks every
+    # stage: tokenizer UDF, zipindex, posting assembly, search kernels.
     t0 = time.time()
     from baguetter_spark.fixtures import gen_transcripts
 
@@ -238,38 +208,13 @@ def main() -> None:
     reps = max(1, int(os.environ.get("BENCH_REPS", "2")))
     best: tuple[dict[str, float], dict[str, float]] | None = None
     env_min: dict[str, float] = {}
-    # protocol v7: sample fault service every 20 s for the DURATION of the
-    # measured reps — bracketing probes cannot see a window closing mid-run
-    # (BENCH/BASELINE.md round 4); the per-run minimum is the judge's
-    # weather context for this very JSON line
-    inleg_samples: list[float] = []
-    sampler_cm = None
-    # BENCH_INLEG_SAMPLER=0: an outer harness (scripts/bench_gated.py)
-    # already runs its own sampler on the same core / period — two
-    # concurrent probes collide and depress each other's readings
-    if os.environ.get("BENCH_INLEG_SAMPLER", "1") != "0":
-        try:
-            sys.path.insert(
-                0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts")
-            )
-            from bench_scaling import _InlegSampler
-
-            sampler_cm = _InlegSampler()
-            sampler_cm.__enter__()
-        except Exception:  # pragma: no cover - sampler helper unavailable
-            sampler_cm = None
-    try:
-        for rep in range(reps):
-            timings, extras = run_suite()
-            log(f"rep {rep + 1}/{reps}: total {sum(timings.values()):.1f}s")
-            for k, v in timings.items():
-                env_min[k] = min(env_min.get(k, v), v)
-            if best is None or sum(timings.values()) < sum(best[0].values()):
-                best = (timings, extras)
-    finally:
-        if sampler_cm is not None:
-            sampler_cm.__exit__(None, None, None)
-            inleg_samples = sampler_cm.samples
+    for rep in range(reps):
+        timings, extras = run_suite()
+        log(f"rep {rep + 1}/{reps}: total {sum(timings.values()):.1f}s")
+        for k, v in timings.items():
+            env_min[k] = min(env_min.get(k, v), v)
+        if best is None or sum(timings.values()) < sum(best[0].values()):
+            best = (timings, extras)
     timings, extras = best
 
     total = round(sum(timings.values()), 3)
@@ -284,19 +229,6 @@ def main() -> None:
     if reps > 1:
         out["reps"] = reps
         out["queries_min_envelope"] = {k: round(v, 3) for k, v in env_min.items()}
-    if inleg_samples:
-        out["inleg_fault_mbps"] = inleg_samples
-    if probe_pre is not None:
-        out["probe_pre"] = probe_pre
-        # bracketing post-probe: pre alone cannot see interference that
-        # arrives DURING the ~90 s run (BENCH/BASELINE.md protocol v6);
-        # pre+post green at least brackets the window
-        try:
-            from bench_scaling import probes
-
-            out["probe_post"] = probes()
-        except Exception:  # pragma: no cover - probe helper unavailable
-            pass
     print(json.dumps(out), flush=True)
     spark.stop()
 

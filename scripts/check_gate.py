@@ -42,6 +42,12 @@ def main() -> int:
     json_out = None
     if "--json" in args:
         i = args.index("--json")
+        if i + 1 == len(args):
+            print(
+                "usage: python scripts/check_gate.py [sf_dir] [name_filter] [--json OUT.json]",
+                file=sys.stderr,
+            )
+            return 2
         json_out = args[i + 1]
         del args[i : i + 2]
     sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"

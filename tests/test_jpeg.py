@@ -78,6 +78,15 @@ def test_errors_and_unsupported():
         decode_jpeg(bytes(good))
 
 
+def test_fill_bytes_before_marker():
+    """T.81 B.1.1.2: any number of 0xFF fill bytes may precede a marker;
+    the marker walk must skip them, not read them as a segment length."""
+    img = _block_constant(16, 8)
+    payload = encode_jpeg(img.reshape(-1), 16, 8, 1)
+    padded = payload[:2] + b"\xff\xff" + payload[2:]
+    assert decode_jpeg(padded)[3].tolist() == decode_jpeg(payload)[3].tolist()
+
+
 def test_decoder_handles_annex_k_style_tables():
     """The decoder must accept ANY valid DHT, not just our encoder's
     canonical layout: re-encode the DHT segment with the DC table split

@@ -1,4 +1,4 @@
-"""Plan-shape regression tests for the three scale-critical physical plans
+"""Plan-shape regression tests for the scale-critical physical plans
 (round-3 VERDICT item 9).  These assert on ``explain()`` output so a future
 refactor cannot silently reintroduce a shuffle or lose a pushed filter —
 each guarded property is worth orders of magnitude at the 100 TB target:
@@ -13,7 +13,9 @@ each guarded property is worth orders of magnitude at the 100 TB target:
    argmax: no Exchange hash-partitioned by ``vec_id`` anywhere in the plan
    (the shape the old crossJoin+row_number window plan required);
 4. parity search — the query tokenize UDF is evaluated once and the
-   float32 fold is the grouped block kernel, not a ``collect_list`` gather.
+   float32 fold is the grouped block kernel, not a ``collect_list`` gather;
+5. per-query top-k — no Python local top-k pass where Spark already plans
+   a partial WindowGroupLimit.
 """
 
 from __future__ import annotations
@@ -109,6 +111,23 @@ def test_parity_search_tokenizes_once_without_gather(spark, loaded_index):
     assert len(re.findall(r"ArrowEvalPython \[_tokenize\(", plan)) == 1, plan
     assert "collect_list" not in plan, plan
     assert "FlatMapGroupsInPandas" in plan, plan
+
+
+@pytest.mark.parametrize("top_k, n_python_passes", [(10, 1), (1001, 2)])
+def test_topk_local_pass_only_above_window_group_limit(
+    spark, loaded_index, top_k, n_python_passes
+):
+    from baguetter_spark.operators.search import score_queries
+
+    queries = spark.createDataFrame(
+        pd.DataFrame({"query_id": ["q0"], "text": ["term00001 term00002"]})
+    )
+    plan = _executed(score_queries(loaded_index, queries, top_k=top_k, parity=False))
+    # up to spark.sql.optimizer.windowGroupLimitThreshold (1000) Spark plans a
+    # partial WindowGroupLimit before the window's shuffle, so the decode is
+    # the only Python pass; above it per_query_topk adds its mapInPandas pass
+    assert len(re.findall(r"\bMapInPandas\b", plan)) == n_python_passes, plan
+    assert ("WindowGroupLimit" in plan) == (n_python_passes == 1), plan
 
 
 def test_ivf_pretrained_assignment_is_map_side(spark):
