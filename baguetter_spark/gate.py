@@ -22,12 +22,12 @@ from __future__ import annotations
 
 from typing import Callable, Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from baguetter_spark.config import SparseIndexConfig, TextPreprocessorConfig
+from baguetter_spark.merge import flat_postings
 from baguetter_spark.operators.indexer import BM25Index, build_index
 from baguetter_spark.operators.search import score_queries
 
@@ -178,32 +178,8 @@ def doc_tf_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trips the delta+varint/f64 codec and block assembly (B7+B11)."""
     index = gate_index(spark, sf_dir, "lucene")
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from baguetter_spark.compress import decode_doc_ids, decode_tfs
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            terms, docs, tfs = [], [], []
-            for tid, n, ids_buf, tf_buf in zip(
-                pdf["term_id"], pdf["n_postings"], pdf["doc_ids_delta"], pdf["tfs"]
-            ):
-                ids = decode_doc_ids(ids_buf, n)
-                tf = decode_tfs(tf_buf, n)
-                terms.append(np.full(n, tid, dtype=np.int64))
-                docs.append(ids)
-                tfs.append(tf)
-            yield pd.DataFrame(
-                {
-                    "term_id": np.concatenate(terms),
-                    "doc_idx": np.concatenate(docs),
-                    "tf": np.concatenate(tfs),
-                }
-            )
-
-    flat = index.postings.mapInPandas(decode, schema="term_id long, doc_idx long, tf long")
     return (
-        flat.join(index.vocab.select("term_id", "term"), "term_id")
+        flat_postings(index.postings).join(index.vocab.select("term_id", "term"), "term_id")
         .join(index.doc_map.select("doc_idx", "doc_id"), "doc_idx")
         .select(_numeric_doc_id(), "term", F.col("tf"))
     )

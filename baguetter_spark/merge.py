@@ -108,18 +108,8 @@ def truncate_lineage(index: BM25Index) -> BM25Index:
     return out
 
 
-def decode_postings(
-    index: BM25Index, mapping: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Decode posting blocks back into the tokenizer's row shape
-    (indexer.TF_BATCH_SCHEMA: doc_idx, doc_len, term_hash, term, tf) under
-    NEW doc ids: ``mapping`` (doc_idx, new_doc_idx, doc_id, doc_len) renames
-    each kept doc and supplies its length; docs absent from it are dropped.
-    Returns (rows, doc_map of the kept docs under their new ids).
-
-    term_hash/term come from the vocab (term ids are index-local sorted
-    ranks), so no posting is re-hashed; only a vocab saved before the
-    hashed columns existed hashes its terms, once per term."""
+def flat_postings(postings: DataFrame) -> DataFrame:
+    """Posting blocks -> one (term_id, doc_idx, tf) row per posting."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from baguetter_spark.compress import decode_doc_ids, decode_tfs
@@ -142,11 +132,27 @@ def decode_postings(
                 }
             )
 
+    return postings.mapInPandas(decode, schema="term_id long, doc_idx long, tf long")
+
+
+def decode_postings(
+    index: BM25Index, mapping: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Decode posting blocks back into the tokenizer's row shape
+    (indexer.TF_BATCH_SCHEMA: doc_idx, doc_len, term_hash, term, tf) under
+    NEW doc ids: ``mapping`` (doc_idx, new_doc_idx, doc_id, doc_len) renames
+    each kept doc and supplies its length; docs absent from it are dropped.
+    Returns (rows, doc_map of the kept docs under their new ids).
+
+    term_hash/term come from the vocab (term ids are index-local sorted
+    ranks), so no posting is re-hashed; only a vocab saved before the
+    hashed columns existed hashes its terms, once per term."""
+
     vocab = index.vocab
     if "term_hash" not in vocab.columns:
         vocab = vocab.withColumn("term_hash", term_hash_udf()(F.col("term")))
     rows = (
-        index.postings.mapInPandas(decode, schema="term_id long, doc_idx long, tf long")
+        flat_postings(index.postings)
         .join(mapping.select("doc_idx", "new_doc_idx", "doc_len"), "doc_idx")
         .join(F.broadcast(vocab.select("term_id", "term_hash", "term")), "term_id")
         .select(

@@ -11,15 +11,17 @@ stages sharing the BM25 build skeleton:
     -> per-doc filtered lens, rel_lens  ~ doc_lens            (B14, index.py:245-247)
     -> posting blocks (doc_ids, tfs, rel_lens)                (skew-bounded, as BM25)
 
-Query serving (Q10) is the same broadcast scatter/gather as BM25 search, but
-the score has a query-dependent part that cannot be precomputed at index
-time: ``score += w * (idf * tf*(a+1)/(tf + a*rel_len + a*avg_entropy)
-+ sim * entropy_norm * beta)`` where ``avg_entropy``/``entropy_norm`` are
-per-QUERY normalized entropies and ``sim = |Q∩D|/|Q|`` counts duplicate
-query tokens (index.py:36-50,105-148).  So posting blocks carry
-``(doc_ids, tfs, rel_lens)`` — rel_len is baked per posting exactly like
-BM25 bakes impacts, which removes the doc-side join from the hot query path
-at 100 TB scale — and the kernel runs in the gather fold.
+Query serving (Q10) is BM25 search's scatter and its grouped (query, block)
+kernel (search.block_topk); only the per-row contribution differs.  Its
+query-dependent part cannot be precomputed at index time:
+``w * (idf * tf*(a+1)/(tf + a*rel_len + a*avg_entropy) + sim * entropy_norm
+* beta)`` where ``avg_entropy``/``entropy_norm`` are per-QUERY normalized
+entropies (one small aggregate over the query-term table, broadcast onto the
+scatter rows) and ``sim = |Q∩D|/|Q|`` counts duplicate query tokens
+(index.py:36-50,105-148) — the kernel takes it from its per-doc hit counts.
+So posting blocks carry ``(doc_ids, tfs, rel_lens)`` — rel_len is baked per
+posting exactly like BM25 bakes impacts, which removes the doc-side join
+from the hot query path at 100 TB scale.
 
 Float discipline (parity mode, differential-tested vs oracle/bmx_ref.py):
 - idf computed entirely in float32 (the reference casts df to float32 first);
@@ -43,7 +45,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from baguetter_spark.compress import (
-    decode_doc_ids,
     decode_impacts,
     decode_tfs,
     encode_doc_ids,
@@ -56,7 +57,15 @@ from baguetter_spark.operators.indexer import (
     hashed_term_stats,
     keyed_term_frequencies,
 )
-from baguetter_spark.operators.search import tokenize_queries
+from baguetter_spark.operators.search import (
+    _TOPK_SCHEMA,
+    _sql_float,
+    block_topk,
+    pad_to_k,
+    per_query_topk,
+    scatter,
+    tokenize_queries,
+)
 from baguetter_spark.operators.zipindex import zip_with_index
 
 # f32 parity entropy materializes a term's full posting list in one pandas
@@ -331,14 +340,15 @@ def bmx_score_queries(
 ) -> DataFrame:
     """Batch BMX search -> results(query_id, rank, doc_id, score).
 
-    Same scatter/gather shape as BM25 `score_queries`; the BMX kernel
-    (index.py:105-148) runs per (query, doc) group in the gather fold
-    because sims / entropy normalization are query-dependent.
+    Same scatter and grouped (query, block) kernel as BM25 `score_queries`,
+    with the BMX contribution (index.py:105-148); ``parity`` picks the
+    float32 reference accumulator or the float64 fast one.
 
     ``empty_query="empty"`` (default) returns only matched docs;
-    ``"reference"`` pads every query to exactly min(top_k, n_docs) rows with
-    zero-score docs — the reference's ``zeros(top_k), arange(top_k)``
-    contract (index.py:63-65), made deterministic (lowest doc ids).
+    ``"reference"`` returns the reference's dense top-k, min(top_k, n_docs)
+    rows per query with zero-score pads on the lowest unmatched doc ids —
+    its ``zeros(top_k), arange(top_k)`` contract (index.py:63-65), made
+    deterministic.
     """
     cfg = index.config
     is_f32 = cfg.dtype == "float32"
@@ -425,187 +435,50 @@ def bmx_score_queries(
             (F.avg("entropy") / F.max("entropy")).alias("avg_entropy"),
         )
 
-    # scatter: queried-term pushdown + broadcast join (as BM25 search);
-    # the pushdown job is skipped for in-memory postings (see search.py)
-    postings = index.postings
-    if not postings.storageLevel.useMemory:
-        qterm_ids = [r["term_id"] for r in qterms.select("term_id").distinct().collect()]
-        if len(qterm_ids) <= 10_000:
-            postings = postings.where(F.col("term_id").isin(qterm_ids))
-
     dt = cfg.dtype
     a64, b64 = float(alpha), float(beta)
 
-    if not parity:
-        # FAST PATH — fully JVM-side gather.  The kernel's per-(query,doc)
-        # sum decomposes algebraically:
-        #     score = Σ_t w·idf·tfc  +  sim · β · Σ_t w·entnorm_t
-        # with sim = m/|Q| and m = the (query,doc) match count, so both Σ
-        # terms and m are plain SUM/COUNT aggregations — no collect_list,
-        # no per-group Python fold.  The decode UDF computes the two
-        # per-posting addends vectorized; Catalyst does the rest.
-        qterms_f = qterms.join(F.broadcast(qscalars), "query_id")
-        joined = postings.join(F.broadcast(qterms_f), "term_id").select(
-            "query_id", "weight", "idf", "entropy", "n_tokens",
-            "ent_max", "avg_entropy",
-            "n_postings", "doc_ids_delta", "tfs", "rel_lens",
+    def contribs(pdf, local_ids, hits):
+        # sims = |Q∩D|/|Q| in float32 over the block's hit counts, duplicate
+        # query tokens counted (index.py:36-50); the token's f64
+        # contribution (index.py:143-146) then folds into the accumulator
+        sim = (hits.astype(np.float32) / np.float32(pdf["n_tokens"].iloc[0])).astype(
+            np.float64
         )
+        emax = float(pdf["ent_max"].iloc[0])
+        eavg = float(pdf["avg_entropy"].iloc[0])
+        for local, w, idf, ent, n, tf_buf, rel_buf in zip(
+            local_ids, pdf["weight"], pdf["idf"], pdf["entropy"],
+            pdf["n_postings"], pdf["tfs"], pdf["rel_lens"],
+        ):
+            tf = decode_tfs(tf_buf, int(n)).astype(np.float64)
+            rel = decode_impacts(rel_buf, dt).astype(np.float64)
+            yield np.float64(w) * (
+                idf * ((tf * (a64 + 1.0)) / (tf + a64 * rel + a64 * eavg))
+                + sim[local] * (ent / emax) * b64
+            )
 
-        parts_schema = (
-            "query_id string, doc_idx long, n_tokens int, "
-            "tf_part double, ent_part double, m long"
+    # scatter (pushdown + broadcast join, as BM25 search), then one grouped
+    # (query, block) pass: parity folds into a float32 accumulator in
+    # query-token order (``scores[ids] += f64``), the fast mode into float64
+    acc_dtype = np.float32 if parity else np.float64
+    kernel = block_topk(
+        top_k,
+        contribs,
+        acc_dtype,
+        np.float32 if is_f32 else np.float64,
+        (cfg.block_doc_range, index.n_docs) if empty_query == "reference" else None,
+    )
+    scattered = scatter(index.postings, qterms)
+    scores = (
+        scattered.join(F.broadcast(qscalars), "query_id")
+        .select(
+            "query_id", "block_id", "tok_pos", "weight", "idf", "entropy", "n_tokens",
+            "ent_max", "avg_entropy", "n_postings", "doc_ids_delta", "tfs", "rel_lens",
         )
-
-        def decode_parts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                cols: dict[str, list] = {k: [] for k in (
-                    "query_id", "doc_idx", "n_tokens", "tf_part", "ent_part",
-                )}
-                for qid, w, idf, ent, ntok, emax, eavg, n, ids_buf, tf_buf, rel_buf in zip(
-                    pdf["query_id"], pdf["weight"], pdf["idf"], pdf["entropy"],
-                    pdf["n_tokens"], pdf["ent_max"], pdf["avg_entropy"],
-                    pdf["n_postings"], pdf["doc_ids_delta"], pdf["tfs"], pdf["rel_lens"],
-                ):
-                    ids = decode_doc_ids(ids_buf, n)
-                    tf = decode_tfs(tf_buf, n).astype(np.float64)
-                    rel = decode_impacts(rel_buf, dt).astype(np.float64)
-                    w64 = np.float64(w)
-                    tf_part = w64 * idf * (
-                        (tf * (a64 + 1.0)) / (tf + a64 * rel + a64 * eavg)
-                    )
-                    cols["query_id"].append(np.full(n, qid, dtype=object))
-                    cols["doc_idx"].append(ids)
-                    cols["n_tokens"].append(np.full(n, ntok, dtype=np.int32))
-                    cols["tf_part"].append(tf_part)
-                    cols["ent_part"].append(np.full(n, w64 * (ent / emax), dtype=np.float64))
-                out = pd.DataFrame({k: np.concatenate(v) for k, v in cols.items()})
-                # local combine (as the BM25 fast path): collapse duplicate
-                # (query, doc) rows from multi-term matches before the Arrow
-                # hand-off — the shuffle then carries at most one row per
-                # (query, doc) per input partition, whatever the per-doc
-                # match multiplicity (m travels as an explicit local count)
-                yield (
-                    out.groupby(["query_id", "doc_idx"], as_index=False, sort=False)
-                    .agg(
-                        n_tokens=("n_tokens", "first"),
-                        tf_part=("tf_part", "sum"),
-                        ent_part=("ent_part", "sum"),
-                        m=("tf_part", "size"),
-                    )
-                )
-
-        parts = joined.mapInPandas(decode_parts, schema=parts_schema)
-        agg = parts.groupBy("query_id", "doc_idx", "n_tokens").agg(
-            F.sum("tf_part").alias("s_tf"),
-            F.sum("ent_part").alias("s_ent"),
-            F.sum("m").alias("m"),
-        )
-        scores = agg.select(
-            "query_id",
-            "doc_idx",
-            "n_tokens",
-            (
-                F.col("s_tf")
-                + (F.col("m").cast("double") / F.col("n_tokens"))
-                * F.lit(b64)
-                * F.col("s_ent")
-            ).alias("score"),
-        )
-    else:
-        # PARITY PATH — float32 accumulation in query-token order, bit-equal
-        # to the reference kernel (scores[ids] += f64 semantics).
-        joined = postings.join(F.broadcast(qterms), "term_id").select(
-            "query_id", "tok_pos", "weight", "idf", "entropy", "n_tokens",
-            "n_postings", "doc_ids_delta", "tfs", "rel_lens",
-        )
-
-        flat_schema = (
-            "query_id string, tok_pos int, weight float, idf double, entropy double, "
-            "n_tokens int, doc_idx long, tf long, rel_len double"
-        )
-
-        def decode_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                cols: dict[str, list] = {k: [] for k in (
-                    "query_id", "tok_pos", "weight", "idf", "entropy", "n_tokens",
-                    "doc_idx", "tf", "rel_len",
-                )}
-                for qid, pos, w, idf, ent, ntok, n, ids_buf, tf_buf, rel_buf in zip(
-                    pdf["query_id"], pdf["tok_pos"], pdf["weight"], pdf["idf"],
-                    pdf["entropy"], pdf["n_tokens"], pdf["n_postings"],
-                    pdf["doc_ids_delta"], pdf["tfs"], pdf["rel_lens"],
-                ):
-                    ids = decode_doc_ids(ids_buf, n)
-                    tf_arr = decode_tfs(tf_buf, n)
-                    rel = decode_impacts(rel_buf, dt).astype(np.float64)
-                    cols["query_id"].append(np.full(n, qid, dtype=object))
-                    cols["tok_pos"].append(np.full(n, pos, dtype=np.int32))
-                    cols["weight"].append(np.full(n, w, dtype=np.float32))
-                    cols["idf"].append(np.full(n, idf, dtype=np.float64))
-                    cols["entropy"].append(np.full(n, ent, dtype=np.float64))
-                    cols["n_tokens"].append(np.full(n, ntok, dtype=np.int32))
-                    cols["doc_idx"].append(ids)
-                    cols["tf"].append(tf_arr)
-                    cols["rel_len"].append(rel)
-                yield pd.DataFrame({k: np.concatenate(v) for k, v in cols.items()})
-
-        flat = joined.mapInPandas(decode_flat, schema=flat_schema)
-        flat = flat.join(F.broadcast(qscalars), "query_id")
-
-        # gather: per-(query, doc) token list -> BMX kernel fold.
-        # sims = |Q∩D|/|Q| falls out of the group size (one row per matched
-        # query-token occurrence), so no separate similarity pass is needed.
-        gathered = flat.groupBy(
-            "query_id", "doc_idx", "n_tokens", "ent_max", "avg_entropy"
-        ).agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct("tok_pos", "weight", "tf", "rel_len", "idf", "entropy")
-                )
-            ).alias("toks")
-        )
-
-        @F.pandas_udf("double")
-        def bmx_fold(
-            toks_s: pd.Series, ntok_s: pd.Series, entmax_s: pd.Series, avgent_s: pd.Series
-        ) -> pd.Series:
-            out = np.empty(len(toks_s), dtype=np.float64)
-            for i, (lst, ntok, emax, eavg) in enumerate(
-                zip(toks_s, ntok_s, entmax_s, avgent_s)
-            ):
-                tf = np.asarray([t["tf"] for t in lst], dtype=np.float64)
-                rel = np.asarray([t["rel_len"] for t in lst], dtype=np.float64)
-                idf = np.asarray([t["idf"] for t in lst], dtype=np.float64)
-                ent = np.asarray([t["entropy"] for t in lst], dtype=np.float64)
-                w = np.asarray([t["weight"] for t in lst], dtype=np.float64)
-                sim = np.float64(np.float32(len(lst)) / np.float32(int(ntok)))
-                contrib = w * (
-                    idf * ((tf * (a64 + 1.0)) / (tf + a64 * rel + a64 * eavg))
-                    + sim * (ent / emax) * b64
-                )
-                acc = np.float32(0.0)
-                for c in contrib:
-                    acc = np.float32(np.float64(acc) + c)
-                out[i] = np.float64(acc)
-            return pd.Series(out)
-
-        scores = gathered.select(
-            "query_id",
-            "doc_idx",
-            "n_tokens",
-            bmx_fold(
-                F.col("toks"), F.col("n_tokens"), F.col("ent_max"), F.col("avg_entropy")
-            ).alias("score"),
-        )
-
-    from baguetter_spark.operators.search import per_query_topk
-
-    # two-phase rank-safe top-k (see per_query_topk: bounds the window's
-    # input to k rows per partition — hot-query straggler defense)
+        .groupBy("query_id", "block_id")
+        .applyInPandas(kernel, schema=_TOPK_SCHEMA.format(_sql_float(dt)))
+    )
     topk = per_query_topk(scores, top_k).join(
         index.doc_map.select("doc_idx", "doc_id"), "doc_idx"
     )
@@ -624,13 +497,14 @@ def bmx_score_queries(
                 return pd.Series((s32 / factor.astype(np.float32)).astype(np.float64))
             return pd.Series(score_s.to_numpy(dtype=np.float64) / factor)
 
-        topk = topk.withColumn("score", norm_udf(F.col("score"), F.col("n_tokens")))
+        n_tok = qterms.select("query_id", "n_tokens").distinct()
+        topk = topk.join(n_tok, "query_id").withColumn(
+            "score", norm_udf(F.col("score"), F.col("n_tokens"))
+        )
 
     if is_f32:
         topk = topk.withColumn("score", F.col("score").cast("float"))
     res = topk.select("query_id", "rank", "doc_idx", "doc_id", "score")
     if empty_query == "reference":
-        from baguetter_spark.operators.search import pad_to_k
-
-        res = pad_to_k(res, queries, index.doc_map, top_k, cfg.dtype)
+        res = pad_to_k(res, queries, scattered, index, top_k)
     return res.select("query_id", "rank", "doc_id", "score")

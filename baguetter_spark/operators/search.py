@@ -24,16 +24,16 @@ corpus size, and the global window only ranks <= k rows per group (Spark's
 WindowGroupLimit cuts them to k per partition before the shuffle).
 
 Scoring modes:
-- ``parity=True`` (default): the group kernel is the reference kernel
-  itself — a float32 accumulator over the block's doc range, updated
-  ``acc[ids] += impact * w`` in query-token order — so scores are
-  bit-identical to the reference (float32 addition is order-sensitive;
-  SURVEY §4.2.2).
+- exhaustive (``block_topk``, shared with BMX): the group kernel sorts the
+  group's rows by token position, decodes them, and folds
+  ``acc[ids] += impact * w`` over the block's doc range in query-token
+  order.  ``parity`` picks only the accumulator dtype: float32 with
+  ``parity=True`` (default) is the reference kernel itself, so scores are
+  bit-identical (float32 addition is order-sensitive; SURVEY §4.2.2);
+  float64 with ``parity=False`` is mathematically equal within 1e-7
+  relative.
 - ``pruned=True`` / ``"blockmax"``: the group kernel is the rank-safe
   MaxScore kernel (wand.py), float64 arithmetic.
-- ``parity=False``: decode in one ``mapInPandas`` pass, then a JVM-side
-  double-precision ``F.sum`` per (query, doc) and ``per_query_topk`` —
-  mathematically equal within 1e-7 relative.
 
 Tie handling: the reference's argpartition tie order is nondeterministic, so
 we define the canonical total order (score desc, doc_idx asc) — SURVEY §4.2.6.
@@ -42,7 +42,9 @@ Empty/fully-OOV queries: by default they return 0 rows; with
 ``empty_query="reference"`` every query is padded to exactly k rows with
 zero-score docs, matching the reference's always-k contract
 (index.py:176-185 + utils/numpy_utils.py:63-73 — its pad docs are
-argpartition-arbitrary; ours are the deterministic lowest doc ids).
+argpartition-arbitrary; ours are the deterministic lowest doc ids).  The
+kernel then ranks each touched block's whole doc range and pads come from
+untouched blocks only, so the result is the reference's dense top-k.
 """
 
 from __future__ import annotations
@@ -55,7 +57,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from baguetter_spark.compress import decode_doc_ids, decode_impacts
-from baguetter_spark.config import SparseIndexConfig
 from baguetter_spark.functions.preprocess import tokens_udf
 from baguetter_spark.operators.indexer import BM25Index
 
@@ -158,19 +159,24 @@ def tokenize_queries(index: BM25Index, queries: DataFrame) -> DataFrame:
 _TOPK_SCHEMA = "query_id string, doc_idx long, score {}"
 
 
-def _decode_group(
-    pdf: pd.DataFrame, dtype: str
-) -> tuple[np.ndarray, list[np.ndarray], list[np.ndarray]]:
-    """Posting rows (one (query, block) group, or any batch of the scatter
-    join) -> (query-token weights, doc-id arrays, impact arrays), one entry
-    per row in row order.  The one posting decode of every search mode."""
-    weights = pdf["weight"].to_numpy()
-    doc_arrays = [
+def _sql_float(dtype: str) -> str:
+    return "float" if dtype == "float32" else "double"
+
+
+def _doc_ids(pdf: pd.DataFrame) -> list[np.ndarray]:
+    return [
         decode_doc_ids(buf, int(n))
         for buf, n in zip(pdf["doc_ids_delta"], pdf["n_postings"])
     ]
+
+
+def _decode_group(
+    pdf: pd.DataFrame, dtype: str
+) -> tuple[np.ndarray, list[np.ndarray], list[np.ndarray]]:
+    """BM25 posting rows (one (query, block) group) -> (query-token weights,
+    doc-id arrays, impact arrays), one entry per row in row order."""
     impact_arrays = [decode_impacts(buf, dtype) for buf in pdf["impacts_f32"]]
-    return weights, doc_arrays, impact_arrays
+    return pdf["weight"].to_numpy(), _doc_ids(pdf), impact_arrays
 
 
 def _group_frame(pdf: pd.DataFrame, ids: np.ndarray, scores: np.ndarray) -> pd.DataFrame:
@@ -180,34 +186,58 @@ def _group_frame(pdf: pd.DataFrame, ids: np.ndarray, scores: np.ndarray) -> pd.D
     )
 
 
-def _parity_block_topk(k: int):
-    """The reference kernel (index.py:150-185) over one (query, block)
-    group, then the group's top-k in canonical order.
+def block_topk(k: int, contribs, acc_dtype, out_dtype, dense: tuple[int, int] | None):
+    """The exhaustive search kernel of every model, over one (query, block)
+    group of the scatter join: sort the rows by ``tok_pos``, decode their doc
+    ids, count the hits per doc over the block's doc range, fold
+    ``acc[local] += contrib`` in query-token order, and emit the group's top-k
+    by (score desc, doc_idx asc) on the ``out_dtype`` score.
 
-    A float32 accumulator spans the block's doc ids and takes
-    ``acc[ids] += impact * w`` per posting row in query-token order — the
-    same float32 operations in the same order as the reference, so scores are
-    bit-identical (0.0f + x == x; each tok_pos occurs once per group, and ids
-    are unique within a row).  Candidates are the docs with at least one
-    posting, zero-sum docs included."""
+    The model supplies ``contribs(pdf, local_ids, hits)``: one contribution
+    array per (sorted) row, aligned with that row's ``local_ids`` entry.
+    A float32 ``acc_dtype`` is the reference kernel itself (index.py:150-185;
+    float32 addition is order-sensitive, SURVEY §4.2.2), so its scores are
+    bit-identical; float64 is the fast mode.  Each tok_pos occurs once per
+    group and ids are unique within a row, so the fancy-indexed add is exact.
+
+    Candidates are the docs with at least one posting, zero and negative
+    sums included.  ``dense=(block_doc_range, n_docs)`` ranks the block's
+    whole doc range instead (clamped to n_docs), unmatched docs at 0.0: the
+    reference's dense score vector restricted to the block."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("tok_pos")
-        weights, doc_arrays, impact_arrays = _decode_group(pdf, "float32")
-        base = min(int(ids[0]) for ids in doc_arrays)
-        span = max(int(ids[-1]) for ids in doc_arrays) - base + 1
-        acc = np.zeros(span, dtype=np.float32)
-        hit = np.zeros(span, dtype=bool)
-        for w, ids, imp in zip(weights, doc_arrays, impact_arrays):
-            local = ids - base
-            acc[local] += imp * np.float32(w)
-            hit[local] = True
-        docs = np.flatnonzero(hit)
-        scores = acc[docs]
+        doc_arrays = _doc_ids(pdf)
+        if dense is None:
+            base = min(int(ids[0]) for ids in doc_arrays)
+            span = max(int(ids[-1]) for ids in doc_arrays) - base + 1
+        else:
+            block_range, n_docs = dense
+            base = int(pdf["block_id"].iloc[0]) * block_range
+            span = min(block_range, n_docs - base)
+        local_ids = [ids - base for ids in doc_arrays]
+        hits = np.zeros(span, dtype=np.int32)
+        for local in local_ids:
+            hits[local] += 1
+        acc = np.zeros(span, dtype=acc_dtype)
+        for local, contrib in zip(local_ids, contribs(pdf, local_ids, hits)):
+            acc[local] += contrib
+        docs = np.arange(span) if dense else np.flatnonzero(hits)
+        scores = acc[docs].astype(out_dtype, copy=False)
         keep = np.lexsort((docs, -scores))[:k]
         return _group_frame(pdf, docs[keep] + base, scores[keep])
 
     return kernel
+
+
+def _bm25_contribs(dtype: str, acc_dtype):
+    """BM25's per-row contribution: ``impact * w`` (baked impacts)."""
+
+    def contribs(pdf, local_ids, hits):
+        for w, buf in zip(pdf["weight"].to_numpy(), pdf["impacts_f32"]):
+            yield decode_impacts(buf, dtype).astype(acc_dtype, copy=False) * acc_dtype(w)
+
+    return contribs
 
 
 def _maxscore_block_topk(k: int, dtype: str):
@@ -220,6 +250,25 @@ def _maxscore_block_topk(k: int, dtype: str):
         return _group_frame(pdf, ids, scores)
 
     return kernel
+
+
+def scatter(postings: DataFrame, qterms: DataFrame) -> DataFrame:
+    """Broadcast the (small) query-term table onto the posting blocks.
+
+    Pushdown: materialize the set of queried term ids and FILTER the posting
+    scan with it.  On a saved index (parquet range-partitioned + sorted by
+    term_id, io.save_index) this turns into row-group min/max pruning — at
+    100 TB only the queried terms' blocks are read instead of the whole
+    posting table (the broadcast join alone would scan all of it).
+    Collecting the id set costs one extra Spark job (tokenize + vocab join),
+    so it runs only when the posting table actually hits storage — for an
+    in-memory (persisted) index the filter saves nothing and the job is pure
+    per-batch latency."""
+    if not postings.storageLevel.useMemory:
+        qterm_ids = [r["term_id"] for r in qterms.select("term_id").distinct().collect()]
+        if len(qterm_ids) <= 10_000:  # keep the isin literal sane for huge batches
+            postings = postings.where(F.col("term_id").isin(qterm_ids))
+    return postings.join(F.broadcast(qterms), "term_id")
 
 
 def score_queries(
@@ -253,9 +302,9 @@ def score_queries(
     skipped block has score <= block bound < θ <= true k-th score.
 
     ``empty_query``: "empty" (default) returns only matched docs; "reference"
-    pads every query to exactly min(top_k, n_docs) rows with zero-score docs
-    (deterministic lowest doc ids), matching the reference's always-k result
-    shape (index.py:176-185).
+    returns the reference's dense top-k, exactly min(top_k, n_docs) rows per
+    query with zero-score pads on the lowest unmatched doc ids
+    (index.py:176-185); it scores exhaustively, whatever ``pruned`` says.
     """
     cfg = index.config
     dtype = cfg.dtype
@@ -280,6 +329,11 @@ def score_queries(
             pruned = False
     if pruned:
         parity = False
+    dense = None
+    if empty_query == "reference":
+        # every doc of a touched block is ranked, so there is nothing to prune
+        pruned = False
+        dense = (cfg.block_doc_range, index.n_docs)
 
     qterms = tokenize_queries(index, queries)
     # Weighted search concatenates sub-queries: global token positions must
@@ -292,24 +346,8 @@ def score_queries(
         *(["n_tokens"] if normalize else []),
     )
 
-    # --- scatter: broadcast the (small) query-term table to posting blocks ---
-    # Pushdown: materialize the (small) set of queried term ids and FILTER the
-    # posting scan with it.  On a saved index (parquet range-partitioned +
-    # sorted by term_id, io.save_index) this turns into row-group min/max
-    # pruning — at 100 TB only the queried terms' blocks are read instead of
-    # the whole posting table (the broadcast join alone would scan all of it).
-    # Collecting the id set costs one extra Spark job (tokenize + vocab join),
-    # so it runs only when the posting table actually hits storage — for an
-    # in-memory (persisted) index the filter saves nothing and the job is
-    # pure per-batch latency.
-    postings = index.postings
-    if not postings.storageLevel.useMemory:
-        qterm_ids = [r["term_id"] for r in qterms.select("term_id").distinct().collect()]
-        if len(qterm_ids) <= 10_000:  # keep the isin literal sane for huge batches
-            postings = postings.where(F.col("term_id").isin(qterm_ids))
-    joined = postings.join(
-        F.broadcast(qterms), "term_id"
-    ).select(
+    scattered = scatter(index.postings, qterms)
+    joined = scattered.select(
         "query_id", "block_id", "tok_pos", "weight", "n_postings",
         "doc_ids_delta", "impacts_f32",
     )
@@ -326,8 +364,7 @@ def score_queries(
             # metadata.  Narrow projection — parquet column pruning keeps the
             # posting payload (doc_ids_delta/impacts) out of this scan.
             ub = (
-                postings.join(F.broadcast(qterms), "term_id")
-                .select(
+                scattered.select(
                     "query_id",
                     "block_id",
                     (
@@ -389,48 +426,19 @@ def score_queries(
             scores = joined.groupBy("query_id", "block_id").applyInPandas(
                 local_topk, schema=topk_schema
             )
-    elif parity:
-        if dtype != "float32":
+    else:
+        if parity and dtype != "float32":
             msg = "parity mode requires dtype='float32' (the reference's default)"
             raise ValueError(msg)
-        # one grouped pass: decode, float32 fold in token order, local top-k
-        scores = joined.groupBy("query_id", "block_id").applyInPandas(
-            _parity_block_topk(top_k), schema=_TOPK_SCHEMA.format("float")
+        # one grouped pass: decode, fold in token order, local top-k
+        acc_dtype = np.float32 if parity else np.float64
+        out_dtype = np.float32 if dtype == "float32" else np.float64
+        kernel = block_topk(
+            top_k, _bm25_contribs(dtype, acc_dtype), acc_dtype, out_dtype, dense
         )
-    else:
-        # fast path: per-batch local aggregation in numpy, then JVM double sum
-        partial_schema = "query_id string, doc_idx long, partial double"
-
-        def decode_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                weights, doc_arrays, impact_arrays = _decode_group(pdf, dtype)
-                pout = pd.DataFrame(
-                    {
-                        "query_id": np.repeat(
-                            pdf["query_id"].to_numpy(dtype=object),
-                            pdf["n_postings"].to_numpy(),
-                        ),
-                        "doc_idx": np.concatenate(doc_arrays),
-                        "partial": np.concatenate(
-                            [
-                                imp.astype(np.float64) * float(w)
-                                for w, imp in zip(weights, impact_arrays)
-                            ]
-                        ),
-                    }
-                )
-                # local combine: shrinks shuffle volume for duplicate terms
-                yield pout.groupby(["query_id", "doc_idx"], as_index=False, sort=False)[
-                    "partial"
-                ].sum()
-
-        partials = joined.mapInPandas(decode_partials, schema=partial_schema)
-        score_col = F.sum("partial")
-        if dtype == "float32":
-            score_col = score_col.cast("float")
-        scores = partials.groupBy("query_id", "doc_idx").agg(score_col.alias("score"))
+        scores = joined.groupBy("query_id", "block_id").applyInPandas(
+            kernel, schema=_TOPK_SCHEMA.format(_sql_float(dtype))
+        )
 
     # --- per-query top-k (canonical tie order) + doc_id remap --------------
     topk = per_query_topk(scores, top_k).join(
@@ -467,46 +475,54 @@ def score_queries(
 
     res = topk.select("query_id", "rank", "doc_idx", "doc_id", "score")
     if empty_query == "reference":
-        res = pad_to_k(res, queries, index.doc_map, top_k, dtype)
+        res = pad_to_k(res, queries, scattered, index, top_k)
     return res.select("query_id", "rank", "doc_id", "score")
 
 
 def pad_to_k(
-    res: DataFrame,
-    queries: DataFrame,
-    doc_map: DataFrame,
-    top_k: int,
-    dtype: str,
+    res: DataFrame, queries: DataFrame, scattered: DataFrame, index, top_k: int
 ) -> DataFrame:
     """Pad every query's results to exactly min(top_k, n_docs) rows with
     zero-score docs (reference always-k contract, index.py:176-185; the
     reference's pad docs are argpartition-arbitrary — ours are the
-    deterministic lowest doc ids not already in the results).
+    deterministic lowest doc ids).
 
-    The pad pool is the first 2*top_k docs by doc_idx: real results can
-    occupy at most top_k of them, leaving >= top_k pads for any query — a
-    small broadcastable constant table regardless of corpus size.
-    """
-    score_t = "float" if dtype == "float32" else "double"
-    pool = (
-        doc_map.select("doc_idx", "doc_id")
-        .orderBy("doc_idx")
-        .limit(2 * top_k)
-    )
-    pads = (
+    ``res`` ranks every doc of each block the query touches (the kernel's
+    ``dense`` mode), so pads come only from blocks where the query has no
+    (query, block) group in ``scattered``: their reference score is exactly
+    0.0, and ``res`` plus the lowest-id docs of those blocks is the
+    reference's dense canonical top-k.  Doc ids are dense, so the lowest
+    ``need`` free blocks supply every pad; they lie below block
+    ``groups + need`` — the work is bounded by the scatter itself.  Shared
+    by the BM25 and BMX indexes."""
+    n_docs, block_range = index.n_docs, index.config.block_doc_range
+    if n_docs == 0:
+        return res
+    n_blocks = -(-n_docs // block_range)
+    need = min(-(-top_k // block_range), n_blocks)
+    groups = scattered.select("query_id", "block_id").distinct()
+    n_groups = groups.groupBy("query_id").agg(F.count("*").alias("n_groups"))
+    last = F.least(F.lit(n_blocks), F.coalesce("n_groups", F.lit(0)) + need) - 1
+    free = (
         queries.select("query_id")
         .distinct()
-        .crossJoin(F.broadcast(pool))
-        .join(res.select("query_id", "doc_idx"), ["query_id", "doc_idx"], "left_anti")
-        .select(
-            "query_id",
-            "doc_idx",
-            "doc_id",
-            F.lit(0.0).cast(score_t).alias("score"),
+        .join(n_groups, "query_id", "left")
+        .select("query_id", F.explode(F.sequence(F.lit(0).cast("long"), last)).alias("block_id"))
+        .join(groups, ["query_id", "block_id"], "left_anti")
+        .withColumn(
+            "r", F.row_number().over(Window.partitionBy("query_id").orderBy("block_id"))
         )
+        .where(F.col("r") <= need)
+    )
+    start = F.col("block_id") * block_range
+    stop = F.least(start + min(block_range, top_k), F.lit(n_docs).cast("long")) - 1
+    zero = F.lit(0.0).cast(_sql_float(index.config.dtype)).alias("score")
+    pads = (
+        free.select("query_id", F.explode(F.sequence(start, stop)).alias("doc_idx"))
+        .join(index.doc_map.select("doc_idx", "doc_id"), "doc_idx")
+        .select("query_id", "doc_idx", "doc_id", zero)
     )
     unioned = res.select("query_id", "doc_idx", "doc_id", "score").unionByName(pads)
-    # bounded re-rank: <= 3*top_k rows per query enter the window
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_idx").asc()
     )
@@ -549,10 +565,9 @@ def blockmax_skip_stats(
         "term_id",
         F.coalesce(F.col("weight"), F.lit(1.0)).cast("float").alias("weight"),
     )
-    postings = index.postings
+    scattered = scatter(index.postings, qterms)
     ub = (
-        postings.join(F.broadcast(qterms), "term_id")
-        .select(
+        scattered.select(
             "query_id",
             "block_id",
             (F.col("weight").cast("double") * F.col("block_max").cast("double")).alias("ubc"),
@@ -564,7 +579,7 @@ def blockmax_skip_stats(
     ub = ub.withColumn("brank", F.row_number().over(wb))
 
     probe = ub.where(F.col("brank") <= probe_blocks).select("query_id", "block_id")
-    joined = postings.join(F.broadcast(qterms), "term_id").select(
+    joined = scattered.select(
         "query_id", "block_id", "weight", "n_postings", "doc_ids_delta", "impacts_f32"
     )
     cand_a = (

@@ -175,3 +175,118 @@ def test_bmx_normalized_scores(spark):
     o = dict(zip(okeys, oscores))
     for k in e:
         assert e[k] == o[k], (k, e[k], o[k])
+
+
+# ------------------------------------------------ multi-block differential
+
+# (query_id, [(text, weight), ...]): sub-queries concatenate in part order
+BMX_MULTIBLOCK_QUERIES = [
+    ("q_plain", [("term00002 hot3 term00011 term00005", 1.0)]),
+    ("q_dup", [("term00003 term00003 term00007 term00003", 1.0)]),
+    (
+        "q_parts",
+        [("term00001 term00002 hot4", 2.5), ("term00004 term00001", -0.75)],
+    ),
+    ("q_neg", [("term00006 hot5", -1.5)]),
+    ("q_neg_dense", [("term00000 term00001", -1.0)]),
+]
+
+
+@pytest.fixture(scope="module")
+def bmx_multiblock(spark):
+    """Default preprocessor at block_doc_range=16: 70 docs over 5 doc-range
+    blocks, so every query's score is folded in several (query, block)
+    groups, each counting its own docs' query-token hits for sim."""
+    from baguetter_spark.operators.bmx import build_bmx_index
+
+    cfg = SparseIndexConfig(block_doc_range=16)
+    corpus = gen_transcripts(70, 9, seed=23, vocab_size=60)
+    ordered = corpus.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    keys = [f"{c}:{t}" for c, t in zip(ordered["conv_id"], ordered["turn_idx"])]
+    oracle = OracleBMXIndex(cfg).add_many(keys, list(ordered["text"]))
+    index = build_bmx_index(spark, spark.createDataFrame(corpus), cfg)
+    rows = [
+        (qid, part, text, weight)
+        for qid, parts in BMX_MULTIBLOCK_QUERIES
+        for part, (text, weight) in enumerate(parts)
+    ]
+    qdf = spark.createDataFrame(
+        rows, "query_id string, part int, text string, weight double"
+    )
+    key_to_idx = {k: i for i, k in oracle.key_mapping.items()}
+    return index, oracle, qdf, key_to_idx
+
+
+def bmx_oracle_topk(oracle, parts, k, normalize, dense_topk=False):
+    """Canonical (score desc, doc_idx asc) top-k of the reference BMX kernel
+    over the docs with at least one posting of the query, or over every doc
+    (the dense vector ``empty_query="reference"`` reproduces)."""
+    ids: list[int] = []
+    weights: list[float] = []
+    for text, w in parts:
+        tids = oracle.to_token_ids(oracle._process(text))
+        ids.extend(int(t) for t in tids)
+        weights.extend([w] * len(tids))
+    idx = oracle.index
+    dense = oracle_bmx_scores_dense(
+        idx, np.array(ids, dtype=np.int64), np.array(weights, dtype=np.float32)
+    )
+    if dense_topk:
+        docs = np.arange(idx.n_docs, dtype=np.int64)
+    else:
+        docs = np.unique(
+            np.concatenate([idx.inverted_index[t]["doc_ids"] for t in ids])
+        ).astype(np.int64)
+    top = docs[np.lexsort((docs, -dense[docs].astype(np.float64)))][:k]
+    scores = dense[top]
+    if normalize:
+        scores = oracle._normalize(len(ids), scores)
+    return list(top), list(scores)
+
+
+@pytest.mark.parametrize(
+    ("parity", "top_k", "normalize"),
+    [(True, 10, False), (True, 10, True), (True, 200, False), (False, 200, True)],
+)
+def test_bmx_multiblock_matches_oracle(spark, bmx_multiblock, parity, top_k, normalize):
+    """BMX top-k across doc-range blocks: duplicate tokens, weighted
+    sub-queries with a negative weight, normalization and top_k > n_docs.
+    Parity scores equal the reference bit for bit; the float64 fast mode
+    is within 1e-5 relative."""
+    from baguetter_spark.operators.bmx import bmx_score_queries
+
+    index, oracle, qdf, key_to_idx = bmx_multiblock
+    assert index.n_docs > 4 * 16
+    got = bmx_score_queries(
+        index, qdf, top_k=top_k, parity=parity, normalize=normalize
+    ).collect()
+    by_q: dict[str, list] = {}
+    for r in got:
+        by_q.setdefault(r["query_id"], []).append(r)
+    for qid, parts in BMX_MULTIBLOCK_QUERIES:
+        exp_idx, exp_scores = bmx_oracle_topk(oracle, parts, top_k, normalize)
+        rows = sorted(by_q[qid], key=lambda r: r["rank"])
+        assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1)), qid
+        assert [key_to_idx[r["doc_id"]] for r in rows] == exp_idx, qid
+        for r, exp in zip(rows, exp_scores):
+            if parity:
+                assert np.float32(r["score"]) == exp, (qid, r["rank"])
+            else:
+                assert abs(r["score"] - float(exp)) <= 1e-5 * abs(float(exp)), qid
+
+
+def test_bmx_multiblock_reference_padding(spark, bmx_multiblock):
+    """empty_query="reference" returns the reference's dense BMX top-k bit
+    for bit: zero-score docs outrank negative sums."""
+    from baguetter_spark.operators.bmx import bmx_score_queries
+
+    index, oracle, qdf, key_to_idx = bmx_multiblock
+    got = bmx_score_queries(index, qdf, top_k=10, empty_query="reference").collect()
+    by_q: dict[str, list] = {}
+    for r in got:
+        by_q.setdefault(r["query_id"], []).append(r)
+    for qid, parts in BMX_MULTIBLOCK_QUERIES:
+        exp_idx, exp_scores = bmx_oracle_topk(oracle, parts, 10, False, dense_topk=True)
+        rows = sorted(by_q[qid], key=lambda r: r["rank"])
+        assert [key_to_idx[r["doc_id"]] for r in rows] == exp_idx, qid
+        assert [np.float32(r["score"]) for r in rows] == exp_scores, qid

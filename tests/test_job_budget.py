@@ -32,6 +32,13 @@ RESUMED_JOBS = 9
 SEARCH_JOBS = 6
 # a reloaded index adds the term-id pushdown collect and the parquet reads
 LOADED_SEARCH_JOBS = 9
+# every exhaustive BM25 and BMX mode runs the same grouped kernel, measured
+# at these settings; BMX adds its persisted query-term table and per-query
+# scalars (a JVM aggregate in the fast mode, a collect_list + pandas UDFs in
+# parity mode)
+FAST_SEARCH_JOBS = 6
+BMX_FAST_SEARCH_JOBS = 12
+BMX_PARITY_SEARCH_JOBS = 12
 
 _groups = itertools.count()
 
@@ -125,3 +132,43 @@ def test_parity_search_reloaded_job_budget(spark, search_setup, tmp_path):
     loaded = load_index(spark, str(tmp_path / "idx"))
     jobs = count_jobs(spark, lambda: score_queries(loaded, queries, top_k=10).collect())
     assert jobs <= LOADED_SEARCH_JOBS
+
+
+def test_fast_search_job_budget(spark, search_setup):
+    """The same batch in the float64 mode (``parity=False``)."""
+    index, queries = search_setup
+    jobs = count_jobs(
+        spark, lambda: score_queries(index, queries, top_k=10, parity=False).collect()
+    )
+    assert jobs <= FAST_SEARCH_JOBS
+
+
+@pytest.fixture(scope="module")
+def bmx_index(spark):
+    from baguetter_spark.operators.bmx import build_bmx_index
+
+    corpus = spark.createDataFrame(gen_transcripts(60, 8, seed=81, vocab_size=60))
+    index = build_bmx_index(spark, corpus, _cfg())
+    index.postings.count()
+    index.doc_map.count()
+    return index
+
+
+@pytest.mark.parametrize(
+    "parity, seed, budget",
+    [(False, 6, BMX_FAST_SEARCH_JOBS), (True, 7, BMX_PARITY_SEARCH_JOBS)],
+)
+def test_bmx_search_job_budget(spark, bmx_index, parity, seed, budget):
+    """A 10-query batch over a BMX index of the same corpus.  Each mode
+    gets a batch of its own: a batch searched before reuses its persisted
+    query-term table and runs 5 jobs fewer."""
+    from baguetter_spark.operators.bmx import bmx_score_queries
+
+    queries = spark.createDataFrame(
+        gen_queries(10, seed=seed, vocab_size=60)[["query_id", "text"]]
+    )
+    jobs = count_jobs(
+        spark,
+        lambda: bmx_score_queries(bmx_index, queries, top_k=10, parity=parity).collect(),
+    )
+    assert jobs <= budget

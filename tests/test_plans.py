@@ -15,7 +15,9 @@ each guarded property is worth orders of magnitude at the 100 TB target:
 4. parity search — the query tokenize UDF is evaluated once and the
    float32 fold is the grouped block kernel, not a ``collect_list`` gather;
 5. per-query top-k — no Python local top-k pass where Spark already plans
-   a partial WindowGroupLimit.
+   a partial WindowGroupLimit;
+6. every exhaustive BM25 and BMX mode scores in that one grouped kernel:
+   no ``mapInPandas`` decode, no gather.
 """
 
 from __future__ import annotations
@@ -124,9 +126,11 @@ def test_topk_local_pass_only_above_window_group_limit(
     )
     plan = _executed(score_queries(loaded_index, queries, top_k=top_k, parity=False))
     # up to spark.sql.optimizer.windowGroupLimitThreshold (1000) Spark plans a
-    # partial WindowGroupLimit before the window's shuffle, so the decode is
-    # the only Python pass; above it per_query_topk adds its mapInPandas pass
-    assert len(re.findall(r"\bMapInPandas\b", plan)) == n_python_passes, plan
+    # partial WindowGroupLimit before the window's shuffle, so the grouped
+    # block kernel is the only Python pass; above it per_query_topk adds its
+    # mapInPandas pass
+    passes = re.findall(r"\b(?:MapInPandas|FlatMapGroupsInPandas)\b", plan)
+    assert len(passes) == n_python_passes, plan
     assert ("WindowGroupLimit" in plan) == (n_python_passes == 1), plan
 
 
@@ -180,5 +184,51 @@ def test_bmx_fast_path_scalars_stay_jvm_side(spark):
     fast = bmx_score_queries(idx, qdf, top_k=5, parity=False)
     plan = _executed(fast)
     assert "collect_list" not in plan, plan
-    # the decode kernel is still the (single) Python pass
+    # the Python passes are the tokenize and the block kernel
     assert "MapInPandas" in plan or "ArrowEvalPython" in plan, plan
+
+
+@pytest.fixture(scope="module")
+def loaded_bmx_index(spark, tmp_path_factory):
+    """Saved and reloaded, so the plan holds no cached build lineage."""
+    from baguetter_spark.io import load_index, save_index
+    from baguetter_spark.operators.bmx import build_bmx_index
+
+    cfg = SparseIndexConfig(preprocessor=TextPreprocessorConfig.parity())
+    idx = build_bmx_index(
+        spark,
+        spark.createDataFrame(gen_transcripts(30, 4, seed=11, vocab_size=60)),
+        cfg,
+    )
+    base = str(tmp_path_factory.mktemp("planbmx"))
+    save_index(idx, base)
+    return load_index(spark, base)
+
+
+@pytest.mark.parametrize(
+    "model, parity", [("bm25", False), ("bmx", True), ("bmx", False)]
+)
+def test_exhaustive_search_is_one_block_kernel(
+    spark, loaded_index, loaded_bmx_index, model, parity
+):
+    from baguetter_spark.operators.bmx import bmx_score_queries
+    from baguetter_spark.operators.search import score_queries
+
+    queries = spark.createDataFrame(
+        pd.DataFrame(
+            {"query_id": ["q0", "q1"], "text": ["term00001 term00002", "term00003"]}
+        )
+    )
+    if model == "bm25":
+        res = score_queries(loaded_index, queries, top_k=10, parity=parity)
+    else:
+        res = bmx_score_queries(loaded_bmx_index, queries, top_k=10, parity=parity)
+    plan = _executed(res)
+    # one grouped (query, block) pass decodes, folds and ranks; no
+    # mapInPandas decode feeding a JVM sum or a collect_list gather
+    assert len(re.findall(r"\bFlatMapGroupsInPandas\b", plan)) == 1, plan
+    assert not re.findall(r"\bMapInPandas\b", plan), plan
+    # BMX parity keeps one collect_list aggregate (its final phase; the
+    # partial phase prints as partial_collect_list): the per-query scalars
+    n_gathers = 1 if (model, parity) == ("bmx", True) else 0
+    assert len(re.findall(r"\bcollect_list\(", plan)) == n_gathers, plan

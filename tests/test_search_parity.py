@@ -236,6 +236,8 @@ MULTIBLOCK_QUERIES = [
         ],
     ),
     ("q_neg", [("term00006 hot5", -1.5)]),
+    # 15 of the 20 lowest doc ids (and 59 of 70 docs) score below zero
+    ("q_neg_dense", [("term00000 term00001", -1.0)]),
 ]
 # no in-vocab token: empty text, null text, all stopwords, all OOV
 EMPTY_QUERIES = [
@@ -269,10 +271,12 @@ def multiblock(spark):
     return engine.index, oracle, qdf, key_to_idx
 
 
-def oracle_multiblock_topk(oracle, parts, k, normalize):
-    """Canonical (score desc, doc_idx asc) top-k over every doc with at
-    least one posting of the query, scored by the reference kernel — the
-    engine's candidate set, zero and negative sums included."""
+def oracle_multiblock_topk(oracle, parts, k, normalize, dense_topk=False):
+    """Canonical (score desc, doc_idx asc) top-k scored by the reference
+    kernel.  The candidates are every doc with at least one posting of the
+    query — the engine's default candidate set, zero and negative sums
+    included — or, with ``dense_topk``, every doc: the reference's dense
+    score vector that ``empty_query="reference"`` reproduces."""
     ids: list[int] = []
     weights: list[float] = []
     for text, w in parts:
@@ -284,12 +288,18 @@ def oracle_multiblock_topk(oracle, parts, k, normalize):
     dense = oracle_calculate_scores_dense(
         idx, token_ids, np.array(weights, dtype=np.float32)
     )
-    docs = np.unique(
-        np.concatenate(
-            [np.empty(0, dtype=np.int64)]
-            + [idx.doc_indices[idx.col_pointers[t] : idx.col_pointers[t + 1]] for t in ids]
-        )
-    ).astype(np.int64)
+    if dense_topk:
+        docs = np.arange(len(dense), dtype=np.int64)
+    else:
+        docs = np.unique(
+            np.concatenate(
+                [np.empty(0, dtype=np.int64)]
+                + [
+                    idx.doc_indices[idx.col_pointers[t] : idx.col_pointers[t + 1]]
+                    for t in ids
+                ]
+            )
+        ).astype(np.int64)
     top = docs[np.lexsort((docs, -dense[docs].astype(np.float64)))][:k]
     scores = dense[top]
     if normalize:
@@ -332,9 +342,10 @@ def test_parity_multiblock_matches_oracle(spark, multiblock, top_k, normalize):
 
 @pytest.mark.parametrize("top_k", [10, 200])
 def test_parity_multiblock_reference_padding(spark, multiblock, top_k):
-    """empty_query="reference": every query, empty ones included, returns
-    min(k, n_docs) rows; a query without an in-vocab token gets zero-score
-    pads, the lowest doc ids in order."""
+    """empty_query="reference" returns the reference's dense top-k bit for
+    bit: min(k, n_docs) rows per query, empty ones included.  Zero-score
+    docs outrank negative sums (q_neg, q_neg_dense), and a query without an
+    in-vocab token gets the lowest doc ids."""
     from baguetter_spark.operators.search import score_queries
 
     index, oracle, qdf, key_to_idx = multiblock
@@ -342,19 +353,12 @@ def test_parity_multiblock_reference_padding(spark, multiblock, top_k):
     got = _by_query(
         score_queries(index, qdf, top_k=top_k, empty_query="reference").collect()
     )
-    for qid, parts in MULTIBLOCK_QUERIES:
+    for qid, parts in MULTIBLOCK_QUERIES + EMPTY_QUERIES:
         rows = got[qid]
+        exp_idx, exp_scores = oracle_multiblock_topk(
+            oracle, parts, top_k, False, dense_topk=True
+        )
+        assert len(exp_idx) == m
         assert [r["rank"] for r in rows] == list(range(1, m + 1)), qid
-        if any(w < 0 for _, w in parts):
-            continue  # zero-score pads outrank negative sums
-        # every matched doc ranks above the pads, with its reference score
-        exp_idx, exp_scores = oracle_multiblock_topk(oracle, parts, top_k, False)
-        head = rows[: len(exp_idx)]
-        assert [key_to_idx[r["doc_id"]] for r in head] == exp_idx, qid
-        assert [np.float32(r["score"]) for r in head] == exp_scores, qid
-        assert all(float(r["score"]) == 0.0 for r in rows[len(exp_idx) :]), qid
-    for qid, _ in EMPTY_QUERIES:
-        rows = got[qid]
-        assert [r["rank"] for r in rows] == list(range(1, m + 1)), qid
-        assert all(float(r["score"]) == 0.0 for r in rows), qid
-        assert [key_to_idx[r["doc_id"]] for r in rows] == list(range(m)), qid
+        assert [key_to_idx[r["doc_id"]] for r in rows] == exp_idx, qid
+        assert [np.float32(r["score"]) for r in rows] == exp_scores, qid
