@@ -122,7 +122,7 @@ def cmd_search(args: argparse.Namespace) -> int:
         queries,
         top_k=args.top_k,
         parity=False,
-        pruned={None: False, "true": True, "blockmax": "blockmax"}[args.pruned],
+        pruned=args.pruned,
         empty_query=args.empty_query,
     )
     if args.output:
@@ -211,10 +211,8 @@ def build_parser() -> argparse.ArgumentParser:
     )
     s.add_argument("--top-k", dest="top_k", type=int, default=10)
     s.add_argument(
-        "--pruned", nargs="?", const="true", default=None,
-        choices=["true", "blockmax"],
-        help="rank-safe pruning: bare flag = per-block MaxScore; "
-        "'blockmax' additionally θ-skips whole doc-range blocks",
+        "--pruned", action="store_true",
+        help="rank-safe MaxScore pruning per doc-range block",
     )
     s.add_argument(
         "--empty-query", dest="empty_query", default="empty",

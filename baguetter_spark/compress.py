@@ -12,7 +12,9 @@ we instead store docID-ascending posting *blocks* with:
   reference base.py:244-256).
 
 Each block row also carries its max impact (``block_max``, written by the
-encoder in indexer.assemble_posting_blocks) for the pruned search paths.
+encoder in indexer.assemble_posting_blocks).  No search path reads it — the
+MaxScore kernel takes its bounds from the decoded impacts — and it stays so
+saved indexes keep one posting layout until that layout is redesigned.
 """
 
 from __future__ import annotations

@@ -227,21 +227,14 @@ class BM25SparkIndex:
         *,
         top_k: int = 100,
         parity: bool = True,
-        pruned: bool | str = False,
-        probe_blocks: int = 2,
+        pruned: bool = False,
     ) -> DataFrame:
         """Batch search: queries(query_id, text[, weight, part]) ->
         results(query_id, rank, doc_id, score).  ``pruned``: False
-        (exhaustive), True (rank-safe MaxScore per doc-range block) or
-        "blockmax" (additionally θ-skips whole blocks via block_max
-        metadata — see operators/search.py)."""
+        (exhaustive) or True (rank-safe MaxScore per doc-range block — see
+        operators/search.py)."""
         return score_queries(
-            self.index,
-            queries,
-            top_k=top_k,
-            parity=parity,
-            pruned=pruned,
-            probe_blocks=probe_blocks,
+            self.index, queries, top_k=top_k, parity=parity, pruned=pruned
         )
 
     def _collect(self, results: DataFrame, query_ids: list[str], strip_turn: bool):

@@ -32,8 +32,8 @@ Scoring modes:
   bit-identical (float32 addition is order-sensitive; SURVEY §4.2.2);
   float64 with ``parity=False`` is mathematically equal within 1e-7
   relative.
-- ``pruned=True`` / ``"blockmax"``: the group kernel is the rank-safe
-  MaxScore kernel (wand.py), float64 arithmetic.
+- ``pruned=True``: the group kernel is the rank-safe MaxScore kernel
+  (wand.py), float64 arithmetic.
 
 Tie handling: the reference's argpartition tie order is nondeterministic, so
 we define the canonical total order (score desc, doc_idx asc) — SURVEY §4.2.6.
@@ -87,12 +87,15 @@ def per_query_topk(
     query at any time), so the bound holds however many batches the
     partition yields.
 
-    NaN scores are DROPPED up front: the two phases would otherwise disagree
-    (pandas sorts NaN last, Spark's descending window ranks NaN first), making
-    results partition-dependent.  BM25/BMX scores are never NaN; the dense/ANN
-    callers filter NaN themselves, so this is a belt-and-braces contract.
+    NaN and null scores are DROPPED up front: the two phases would otherwise
+    disagree (pandas sorts NaN last, Spark's descending window ranks NaN
+    first), making results partition-dependent.  A NaN query weight makes
+    the search kernels' scores NaN, and those leave ``applyInPandas`` as
+    nulls, which ``isnan`` does not match; the dense/ANN callers filter NaN
+    themselves.
     """
-    scores = scores.where(~F.isnan(F.col(score_col).cast("double")))
+    score = F.col(score_col).cast("double")
+    scores = scores.where(score.isNotNull() & ~F.isnan(score))
 
     def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc: pd.DataFrame | None = None
@@ -278,28 +281,18 @@ def score_queries(
     top_k: int = 100,
     parity: bool = True,
     normalize: bool | None = None,
-    pruned: bool | str = False,
+    pruned: bool = False,
     empty_query: str = "empty",
-    probe_blocks: int = 2,
 ) -> DataFrame:
     """Returns results(query_id, rank, doc_id, score) — canonical tie order.
 
     ``pruned=True`` routes through the rank-safe block-max MaxScore kernel
     (wand.py) instead of exhaustive scoring; implies ``parity=False`` score
     arithmetic (float64) but identical doc sets/ranks (property-tested).
-
-    ``pruned="blockmax"`` additionally skips ENTIRE doc-range blocks whose
-    query upper bound (sum over query terms of weight * per-block max
-    impact, metadata written at index time) cannot reach the running top-k
-    threshold: phase A scores the ``probe_blocks`` most-promising blocks per
-    query exactly (doc ranges partition docs, so a local candidate's score
-    is its exact final score), the k-th phase-A score becomes θ, and phase B
-    scores only blocks with bound >= θ (an epsilon-margin keep guards f64
-    summation-order ulps; ties at θ are kept, so canonical tie order is
-    preserved).  At sf-bench scale (1-2 blocks) this is pure overhead; at
-    10^12 turns (~10^7 blocks) it is the block-max WAND scan-skip that makes
-    selective queries sublinear in corpus size.  Rank-safe: a doc in a
-    skipped block has score <= block bound < θ <= true k-th score.
+    It is the only pruning path: a two-phase variant that skipped whole
+    doc-range blocks by their ``block_max`` bound rejoined the postings once
+    per phase, and those extra jobs cost more than the skipped blocks at
+    every block count measured (4 to 625 blocks).
 
     ``empty_query``: "empty" (default) returns only matched docs; "reference"
     returns the reference's dense top-k, exactly min(top_k, n_docs) rows per
@@ -312,11 +305,8 @@ def score_queries(
     if empty_query not in ("empty", "reference"):
         msg = f"empty_query must be 'empty' or 'reference', got {empty_query!r}"
         raise ValueError(msg)
-    if pruned not in (False, True, "blockmax"):
-        msg = f"pruned must be False, True or 'blockmax', got {pruned!r}"
-        raise ValueError(msg)
-    if pruned == "blockmax" and probe_blocks < 1:
-        msg = f"probe_blocks must be >= 1, got {probe_blocks}"
+    if not isinstance(pruned, bool):
+        msg = f"pruned must be True or False, got {pruned!r}"
         raise ValueError(msg)
     if pruned and "weight" in queries.columns:
         # Rank-safety guard: MaxScore's suffix bound assumes every term's
@@ -353,92 +343,21 @@ def score_queries(
     )
 
     if pruned:
-        # Doc ranges partition documents, so a doc's FULL score lives inside
-        # one (query_id, block_id) group: run the MaxScore kernel per group
-        # (bounded memory, parallel across ranges), emit exact-scored local
-        # top-k candidates, take the global top-k of the union.
-        local_topk = _maxscore_block_topk(top_k, dtype)
-        topk_schema = _TOPK_SCHEMA.format("double")
-        if pruned == "blockmax":
-            # --- phase 0: per-(query, block) upper bounds from block_max
-            # metadata.  Narrow projection — parquet column pruning keeps the
-            # posting payload (doc_ids_delta/impacts) out of this scan.
-            ub = (
-                scattered.select(
-                    "query_id",
-                    "block_id",
-                    (
-                        F.col("weight").cast("double")
-                        * F.col("block_max").cast("double")
-                    ).alias("ubc"),
-                )
-                .groupBy("query_id", "block_id")
-                .agg(F.sum("ubc").alias("ub"))
-            )
-            wb = Window.partitionBy("query_id").orderBy(
-                F.desc("ub"), F.col("block_id").asc()
-            )
-            ub = ub.withColumn("brank", F.row_number().over(wb))
-            # --- phase A: exact top-k inside the most-promising blocks ---
-            probe = ub.where(F.col("brank") <= probe_blocks).select(
-                "query_id", "block_id"
-            )
-            cand_a = (
-                joined.join(F.broadcast(probe), ["query_id", "block_id"])
-                .groupBy("query_id", "block_id")
-                .applyInPandas(local_topk, schema=topk_schema)
-            )
-            # tiny (<= queries * probe_blocks * k rows); reused for θ + union.
-            # No explicit unpersist: the caller consumes the returned plan
-            # later, and Spark's ContextCleaner unpersists the (bounded)
-            # block once the DataFrame goes out of driver scope.
-            cand_a = cand_a.persist()
-            wk = Window.partitionBy("query_id").orderBy(
-                F.desc("score"), F.col("doc_idx").asc()
-            )
-            theta = (
-                cand_a.withColumn("r", F.row_number().over(wk))
-                .where(F.col("r") == top_k)
-                .select("query_id", F.col("score").alias("theta"))
-            )
-            # --- phase B: only blocks whose bound can still matter.  The
-            # epsilon keep-margin covers f64 summation-order ulps (ub and the
-            # kernel sum contributions in different orders); scores are >= 0
-            # here (negative weights fell back to exhaustive above).
-            keep = (
-                ub.where(F.col("brank") > probe_blocks)
-                .join(theta, "query_id", "left")
-                .where(
-                    F.col("theta").isNull()
-                    | (F.col("ub") >= F.col("theta") * (1.0 - 1e-9) - 1e-12)
-                )
-                .select("query_id", "block_id")
-            )
-            cand_b = (
-                joined.join(keep, ["query_id", "block_id"])
-                .groupBy("query_id", "block_id")
-                .applyInPandas(local_topk, schema=topk_schema)
-            )
-            # doc ranges partition docs → a doc appears in exactly one block;
-            # the union is duplicate-free by construction
-            scores = cand_a.unionByName(cand_b)
-        else:
-            scores = joined.groupBy("query_id", "block_id").applyInPandas(
-                local_topk, schema=topk_schema
-            )
+        kernel, score_type = _maxscore_block_topk(top_k, dtype), "double"
     else:
         if parity and dtype != "float32":
             msg = "parity mode requires dtype='float32' (the reference's default)"
             raise ValueError(msg)
-        # one grouped pass: decode, fold in token order, local top-k
         acc_dtype = np.float32 if parity else np.float64
         out_dtype = np.float32 if dtype == "float32" else np.float64
         kernel = block_topk(
             top_k, _bm25_contribs(dtype, acc_dtype), acc_dtype, out_dtype, dense
         )
-        scores = joined.groupBy("query_id", "block_id").applyInPandas(
-            kernel, schema=_TOPK_SCHEMA.format(_sql_float(dtype))
-        )
+        score_type = _sql_float(dtype)
+    # one grouped pass per (query, doc-range block): decode, score, local top-k
+    scores = joined.groupBy("query_id", "block_id").applyInPandas(
+        kernel, schema=_TOPK_SCHEMA.format(score_type)
+    )
 
     # --- per-query top-k (canonical tie order) + doc_id remap --------------
     topk = per_query_topk(scores, top_k).join(
@@ -531,93 +450,3 @@ def pad_to_k(
         .where(F.col("rank") <= top_k)
         .select("query_id", "rank", "doc_idx", "doc_id", "score")
     )
-
-
-def blockmax_skip_stats(
-    index: BM25Index,
-    queries: DataFrame,
-    *,
-    top_k: int = 10,
-    probe_blocks: int = 1,
-) -> DataFrame:
-    """Measurement companion to ``score_queries(pruned="blockmax")`` —
-    round-4 VERDICT item 5 (skip-rate evidence).  Reproduces phases 0/A/θ
-    with the same formulas (upper bound = sum over query terms of
-    weight * block_max; θ = exact k-th score inside the probe_blocks
-    most-promising blocks; keep iff ub >= θ*(1-1e-9)-1e-12) and returns
-    per-query block accounting WITHOUT running phase B:
-
-        (query_id, blocks_total, blocks_probed, blocks_kept,
-         blocks_skipped, theta)
-
-    blocks_total counts blocks containing >= 1 queried term (blocks with
-    no query term never enter the scatter join in the first place — that
-    is term-pushdown skipping, not θ-skipping, so it is deliberately NOT
-    counted here).  blocks_skipped = total - probed - kept is the number
-    of candidate-bearing blocks the θ-gate prunes; at the driver SFs with
-    one 65536-doc block per corpus it is structurally 0 — the evidence
-    run (scripts/blockmax_evidence.py) builds indexes at smaller
-    block_doc_range to reach the multi-block regime a 10^12-doc corpus
-    lives in.  Diagnostic only: the serving path in ``score_queries`` is
-    untouched."""
-    qterms = tokenize_queries(index, queries).select(
-        "query_id",
-        "term_id",
-        F.coalesce(F.col("weight"), F.lit(1.0)).cast("float").alias("weight"),
-    )
-    scattered = scatter(index.postings, qterms)
-    ub = (
-        scattered.select(
-            "query_id",
-            "block_id",
-            (F.col("weight").cast("double") * F.col("block_max").cast("double")).alias("ubc"),
-        )
-        .groupBy("query_id", "block_id")
-        .agg(F.sum("ubc").alias("ub"))
-    )
-    wb = Window.partitionBy("query_id").orderBy(F.desc("ub"), F.col("block_id").asc())
-    ub = ub.withColumn("brank", F.row_number().over(wb))
-
-    probe = ub.where(F.col("brank") <= probe_blocks).select("query_id", "block_id")
-    joined = scattered.select(
-        "query_id", "block_id", "weight", "n_postings", "doc_ids_delta", "impacts_f32"
-    )
-    cand_a = (
-        joined.join(F.broadcast(probe), ["query_id", "block_id"])
-        .groupBy("query_id", "block_id")
-        .applyInPandas(
-            _maxscore_block_topk(top_k, index.config.dtype),
-            schema=_TOPK_SCHEMA.format("double"),
-        )
-    )
-    wk = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("doc_idx").asc())
-    theta = (
-        cand_a.withColumn("r", F.row_number().over(wk))
-        .where(F.col("r") == top_k)
-        .select("query_id", F.col("score").alias("theta"))
-    )
-    rest = ub.where(F.col("brank") > probe_blocks).join(theta, "query_id", "left")
-    kept = rest.where(
-        F.col("theta").isNull() | (F.col("ub") >= F.col("theta") * (1.0 - 1e-9) - 1e-12)
-    )
-    totals = ub.groupBy("query_id").agg(F.count("*").alias("blocks_total"))
-    probed = probe.groupBy("query_id").agg(F.count("*").alias("blocks_probed"))
-    n_kept = kept.groupBy("query_id").agg(F.count("*").alias("blocks_kept"))
-    out = (
-        totals.join(probed, "query_id", "left")
-        .join(n_kept, "query_id", "left")
-        .join(theta, "query_id", "left")
-        .select(
-            "query_id",
-            "blocks_total",
-            F.coalesce("blocks_probed", F.lit(0)).alias("blocks_probed"),
-            F.coalesce("blocks_kept", F.lit(0)).alias("blocks_kept"),
-            (
-                F.col("blocks_total")
-                - F.coalesce("blocks_probed", F.lit(0))
-                - F.coalesce("blocks_kept", F.lit(0))
-            ).alias("blocks_skipped"),
-            "theta",
-        )
-    )
-    return out

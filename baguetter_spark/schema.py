@@ -49,7 +49,9 @@ VOCAB_SCHEMA = T.StructType(
 # many block rows instead of one unbounded row — this is the skew defense).
 # Arrays are docID-ascending within the row; doc_ids are delta+varint
 # compressed; impacts are raw little-endian float32 bytes; block_max (the
-# block's max impact) is the upper bound the pruned search paths read.
+# block's max impact) is read by no search path (the MaxScore kernel takes
+# its bounds from the decoded impacts); it stays so saved indexes keep one
+# posting layout until that layout is redesigned.
 POSTINGS_SCHEMA = T.StructType(
     [
         T.StructField("term_id", T.LongType(), False),

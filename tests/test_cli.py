@@ -57,6 +57,22 @@ def test_cli_build_and_search(spark, paths, capsys):
     lines = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
     assert lines and all("doc_id" in l for l in lines)
 
+    # the same query through the MaxScore kernel returns the same docs
+    rc = main(
+        ["search", "--index", idx_dir, "--query", "term00001", "--top-k", "3",
+         "--pruned"]
+    )
+    assert rc == 0
+    pruned = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
+    assert [l["doc_id"] for l in pruned] == [l["doc_id"] for l in lines]
+
+    # --pruned is a plain flag: the retired "blockmax" value is an argparse error
+    with pytest.raises(SystemExit) as exc:
+        main(["search", "--index", idx_dir, "--query", "term00001", "--pruned",
+              "blockmax"])
+    assert exc.value.code == 2
+    capsys.readouterr()
+
 
 def test_cli_build_resumable(spark, paths, capsys):
     base, tpath, _ = paths

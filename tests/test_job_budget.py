@@ -37,6 +37,8 @@ LOADED_SEARCH_JOBS = 9
 # scalars (a JVM aggregate in the fast mode, a collect_list + pandas UDFs in
 # parity mode)
 FAST_SEARCH_JOBS = 6
+# the MaxScore kernel in the same grouped pass, measured at these settings
+PRUNED_SEARCH_JOBS = 6
 BMX_FAST_SEARCH_JOBS = 12
 BMX_PARITY_SEARCH_JOBS = 12
 
@@ -141,6 +143,15 @@ def test_fast_search_job_budget(spark, search_setup):
         spark, lambda: score_queries(index, queries, top_k=10, parity=False).collect()
     )
     assert jobs <= FAST_SEARCH_JOBS
+
+
+def test_pruned_search_job_budget(spark, search_setup):
+    """The same batch through the MaxScore kernel (``pruned=True``)."""
+    index, queries = search_setup
+    jobs = count_jobs(
+        spark, lambda: score_queries(index, queries, top_k=10, pruned=True).collect()
+    )
+    assert jobs <= PRUNED_SEARCH_JOBS
 
 
 @pytest.fixture(scope="module")

@@ -162,32 +162,6 @@ def F_col_double(name: str):
     return F.col(name).cast("array<double>").alias(name)
 
 
-def test_bmx_fast_path_scalars_stay_jvm_side(spark):
-    """Round-4 guard: the fast-path per-query scalars (ent_max,
-    avg_entropy) are ONE JVM hash aggregate; reintroducing the
-    collect_list + pandas-UDF plan would add a whole Python stage per
-    search (the bmx_search_20q root cause — BENCH/BASELINE.md round 4)."""
-    import pandas as pd
-
-    from baguetter_spark.config import SparseIndexConfig, TextPreprocessorConfig
-    from baguetter_spark.operators.bmx import bmx_score_queries, build_bmx_index
-
-    cfg = SparseIndexConfig(preprocessor=TextPreprocessorConfig.parity())
-    idx = build_bmx_index(
-        spark,
-        spark.createDataFrame(gen_transcripts(30, 4, seed=11, vocab_size=60)),
-        cfg,
-    )
-    qdf = spark.createDataFrame(
-        pd.DataFrame({"query_id": ["q0"], "text": ["term00001 term00002"]})
-    )
-    fast = bmx_score_queries(idx, qdf, top_k=5, parity=False)
-    plan = _executed(fast)
-    assert "collect_list" not in plan, plan
-    # the Python passes are the tokenize and the block kernel
-    assert "MapInPandas" in plan or "ArrowEvalPython" in plan, plan
-
-
 @pytest.fixture(scope="module")
 def loaded_bmx_index(spark, tmp_path_factory):
     """Saved and reloaded, so the plan holds no cached build lineage."""
@@ -203,6 +177,30 @@ def loaded_bmx_index(spark, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("planbmx"))
     save_index(idx, base)
     return load_index(spark, base)
+
+
+def test_bmx_fast_path_scalars_stay_jvm_side(spark, loaded_bmx_index):
+    """Round-4 guard: the fast-path per-query scalars (ent_max,
+    avg_entropy) are ONE JVM hash aggregate; reintroducing the
+    collect_list + pandas-UDF plan would add a whole Python stage per
+    search (the bmx_search_20q root cause — BENCH/BASELINE.md round 4).
+    Runs on a reloaded index so the plan holds no build lineage."""
+    from baguetter_spark.operators.bmx import bmx_score_queries
+
+    qdf = spark.createDataFrame(
+        pd.DataFrame({"query_id": ["q0"], "text": ["term00001 term00002"]})
+    )
+    fast = bmx_score_queries(loaded_bmx_index, qdf, top_k=5, parity=False)
+    plan = _executed(fast)
+    assert "collect_list" not in plan, plan
+    # the Python passes are the tokenize UDF and the block kernel.  The
+    # persisted query-term table has two readers (the scatter join and the
+    # scalar aggregate), and each prints its adaptive plan twice (final
+    # and initial): the one tokenize UDF shows up four times.
+    python_ops = re.findall(r"\b(\w*InPandas|\w*EvalPython)\b", plan)
+    assert sorted(python_ops) == ["ArrowEvalPython"] * 4 + ["FlatMapGroupsInPandas"], plan
+    udfs = re.findall(r"ArrowEvalPython \[([^\]]*)\]", plan)
+    assert all(re.fullmatch(r"_tokenize\(text#\d+\)#\d+", u) for u in udfs), udfs
 
 
 @pytest.mark.parametrize(

@@ -61,7 +61,7 @@ def test_empty_terms():
     assert len(ids) == 0
 
 
-@pytest.mark.parametrize("mode", [True, "blockmax"])
+@pytest.mark.parametrize("mode", [True])
 def test_spark_pruned_equals_exhaustive(spark, mode):
     corpus = gen_transcripts(120, 15, seed=17, vocab_size=200)
     cfg = SparseIndexConfig(
@@ -72,26 +72,25 @@ def test_spark_pruned_equals_exhaustive(spark, mode):
     queries = gen_queries(10, seed=9, vocab_size=200)
     qdf = spark.createDataFrame(queries)
 
-    fast = score_queries(index, qdf, top_k=10, parity=False).collect()
-    pruned = score_queries(index, qdf, top_k=10, pruned=mode).collect()
-
     def keyed(rows):
-        return {
-            (r["query_id"], r["doc_id"]): (r["rank"], round(float(r["score"]), 6))
-            for r in rows
-        }
+        return {(r["query_id"], r["doc_id"]): (r["rank"], float(r["score"])) for r in rows}
 
-    f, p = keyed(fast), keyed(pruned)
-    assert set(f) == set(p)
-    for k_ in f:
-        assert f[k_][0] == p[k_][0], (k_, f[k_], p[k_])
-        assert abs(f[k_][1] - p[k_][1]) < 1e-6
+    # k=50 exceeds any 32-doc block's candidate count: every block's local
+    # top-k is its whole candidate set
+    for top_k in (10, 50):
+        f = keyed(score_queries(index, qdf, top_k=top_k, parity=False).collect())
+        p = keyed(score_queries(index, qdf, top_k=top_k, pruned=mode).collect())
+        assert set(f) == set(p)
+        for key in f:
+            assert f[key][0] == p[key][0], (top_k, key, f[key], p[key])
+            # f64 summation order differs between the two kernels
+            assert abs(f[key][1] - p[key][1]) < 1e-6
 
 
-def test_blockmax_tie_boundary(spark):
-    """All-equal scores put every doc exactly AT θ: the epsilon keep-margin
-    must retain every block so canonical (score desc, doc_idx asc) tie order
-    matches exhaustive scoring identically."""
+def test_pruned_tie_boundary(spark):
+    """All-equal scores over several doc-range blocks: the MaxScore kernel's
+    local top-k and the global window must keep the canonical (score desc,
+    doc_idx asc) tie order, identical to exhaustive scoring."""
     corpus = gen_transcripts(8, 12, seed=3, vocab_size=50)
     # identical text everywhere → every doc scores identically for any query
     corpus["text"] = "alpha beta gamma"
@@ -103,35 +102,10 @@ def test_blockmax_tie_boundary(spark):
         pd.DataFrame({"query_id": ["q0"], "text": ["alpha gamma"]})
     )
     fast = score_queries(index, qdf, top_k=7, parity=False).collect()
-    bm = score_queries(
-        index, qdf, top_k=7, pruned="blockmax", probe_blocks=1
-    ).collect()
+    pruned = score_queries(index, qdf, top_k=7, pruned=True).collect()
     f = {(r["query_id"], r["doc_id"]): r["rank"] for r in fast}
-    b = {(r["query_id"], r["doc_id"]): r["rank"] for r in bm}
-    assert f == b and len(f) == 7
-
-
-def test_blockmax_single_probe_block(spark):
-    """probe_blocks=1 with k larger than any single block's candidate count:
-    θ never forms (phase A yields < k rows), every block must be kept."""
-    corpus = gen_transcripts(90, 15, seed=23, vocab_size=120)
-    cfg = SparseIndexConfig(
-        preprocessor=TextPreprocessorConfig.parity(), block_doc_range=16
-    )
-    index = build_index(spark, spark.createDataFrame(corpus), cfg)
-    qdf = spark.createDataFrame(gen_queries(6, seed=4, vocab_size=120))
-    fast = score_queries(index, qdf, top_k=50, parity=False).collect()
-    bm = score_queries(
-        index, qdf, top_k=50, pruned="blockmax", probe_blocks=1
-    ).collect()
-    f = {(r["query_id"], r["doc_id"]): (r["rank"], float(r["score"])) for r in fast}
-    b = {(r["query_id"], r["doc_id"]): (r["rank"], float(r["score"])) for r in bm}
-    assert set(f) == set(b)
-    for key in f:
-        assert f[key][0] == b[key][0], (key, f[key], b[key])
-        # f64 summation order differs between the two paths — tolerance, not
-        # equality (the parity-mode f32 ordered fold is the bit-exact path)
-        assert abs(f[key][1] - b[key][1]) < 1e-5
+    p = {(r["query_id"], r["doc_id"]): r["rank"] for r in pruned}
+    assert f == p and len(f) == 7
 
 
 def test_invalid_pruned_value(spark):
@@ -139,18 +113,17 @@ def test_invalid_pruned_value(spark):
     cfg = SparseIndexConfig(preprocessor=TextPreprocessorConfig.parity())
     index = build_index(spark, spark.createDataFrame(corpus), cfg)
     qdf = spark.createDataFrame(pd.DataFrame({"query_id": ["q0"], "text": ["x"]}))
-    with pytest.raises(ValueError, match="pruned"):
-        score_queries(index, qdf, pruned="wand-ish")
-    with pytest.raises(ValueError, match="probe_blocks"):
-        score_queries(index, qdf, pruned="blockmax", probe_blocks=0)
+    for bad in ("wand-ish", "blockmax"):
+        with pytest.raises(ValueError, match="pruned"):
+            score_queries(index, qdf, pruned=bad)
 
 
-@pytest.mark.parametrize("mode", [True, "blockmax"])
+@pytest.mark.parametrize("mode", [True])
 def test_negative_weight_pruned_falls_back(spark, mode):
     """MaxScore's suffix bound is invalid under negative weights (a partial
-    score can DECREASE later) — and so is the blockmax block bound.  Both
-    pruned modes must detect the negative weight and fall back to exhaustive
-    scoring — results identical to parity=False."""
+    score can DECREASE later): the pruned mode must detect the negative
+    weight and fall back to exhaustive scoring — results identical to
+    parity=False."""
 
     corpus = gen_transcripts(100, 12, seed=5, vocab_size=150)
     cfg = SparseIndexConfig(
@@ -174,48 +147,34 @@ def test_negative_weight_pruned_falls_back(spark, mode):
     assert f == p
 
 
-def test_blockmax_skip_stats_accounting_and_skips(spark):
-    """blockmax_skip_stats (round-5 evidence companion): block accounting
-    is consistent (total == probed + kept + skipped) and, on a corpus
-    where one block concentrates the high-impact postings, θ-gating
-    SKIPS the low-bound blocks — while the pruned search itself stays
-    rank-identical to exhaustive (skipping never costs a result)."""
-    from baguetter_spark.operators.search import blockmax_skip_stats
+def test_nan_weight_drops_nan_scores(spark):
+    """A NaN query weight makes every doc its terms touch score NaN.  Those
+    docs are dropped, never returned with a null score: a query whose only
+    part is NaN-weighted returns 0 rows, and parity, fast and pruned
+    search agree on the rest.  The weight is a Spark NaN (cast from the
+    string "NaN"); a pandas NaN would arrive as null and be coalesced to
+    1.0."""
+    from pyspark.sql import functions as F
 
-    corpus = gen_transcripts(64, 4, seed=5, vocab_size=60)
-    # rows are (conv, turn)-ordered = doc_idx order: docs 0-15 carry 'hot'
-    # at tf=4 in 4-token docs (huge impact); the rest mention it once in a
-    # 21-token doc (tiny impact) -> block 0 dominates every upper bound
-    texts = []
-    for i in range(len(corpus)):
-        if i < 16:
-            texts.append("hot hot hot hot")
-        else:
-            texts.append("hot " + " ".join(f"filler{(i + j) % 30}" for j in range(20)))
-    corpus["text"] = texts
+    corpus = gen_transcripts(100, 12, seed=5, vocab_size=150)
     cfg = SparseIndexConfig(
-        preprocessor=TextPreprocessorConfig.parity(), block_doc_range=16
+        preprocessor=TextPreprocessorConfig.parity(), block_doc_range=32
     )
     index = build_index(spark, spark.createDataFrame(corpus), cfg)
-    qdf = spark.createDataFrame(pd.DataFrame({"query_id": ["q0"], "text": ["hot"]}))
-
-    stats = blockmax_skip_stats(index, qdf, top_k=3, probe_blocks=1).collect()
-    assert len(stats) == 1
-    s = stats[0]
-    assert s["blocks_total"] == 4  # 64 docs / 16-doc ranges, 'hot' in all
-    assert s["blocks_probed"] == 1
-    assert (
-        s["blocks_total"]
-        == s["blocks_probed"] + s["blocks_kept"] + s["blocks_skipped"]
-    )
-    assert s["blocks_skipped"] >= 1, dict(s.asDict())
-    assert s["theta"] is not None and s["theta"] > 0
-
-    # skipping is rank-safe: blockmax == exhaustive on the same query
-    fast = score_queries(index, qdf, top_k=3, parity=False).collect()
-    bm = score_queries(
-        index, qdf, top_k=3, pruned="blockmax", probe_blocks=1
-    ).collect()
-    f = {(r["query_id"], r["doc_id"]): r["rank"] for r in fast}
-    b = {(r["query_id"], r["doc_id"]): r["rank"] for r in bm}
-    assert f == b
+    qdf = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "query_id": ["q0", "q0", "q1"],
+                "part": [0, 1, 0],
+                "text": ["term00001 term00002", "term00003 term00004", "term00005"],
+                "weight": ["1.0", "NaN", "NaN"],
+            }
+        )
+    ).withColumn("weight", F.col("weight").cast("double"))
+    ids = {}
+    for mode in ({"parity": True}, {"parity": False}, {"pruned": True}):
+        rows = score_queries(index, qdf, top_k=10, **mode).collect()
+        assert all(r["score"] is not None for r in rows), (mode, rows)
+        assert {r["query_id"] for r in rows} == {"q0"}, mode
+        ids[str(mode)] = sorted((r["query_id"], r["rank"], r["doc_id"]) for r in rows)
+    assert len(set(map(tuple, ids.values()))) == 1, ids
