@@ -75,16 +75,34 @@ def test_spark_pruned_equals_exhaustive(spark, mode):
     def keyed(rows):
         return {(r["query_id"], r["doc_id"]): (r["rank"], float(r["score"])) for r in rows}
 
-    # k=50 exceeds any 32-doc block's candidate count: every block's local
-    # top-k is its whole candidate set
-    for top_k in (10, 50):
-        f = keyed(score_queries(index, qdf, top_k=top_k, parity=False).collect())
-        p = keyed(score_queries(index, qdf, top_k=top_k, pruned=mode).collect())
-        assert set(f) == set(p)
-        for key in f:
-            assert f[key][0] == p[key][0], (top_k, key, f[key], p[key])
-            # f64 summation order differs between the two kernels
-            assert abs(f[key][1] - p[key][1]) < 1e-6
+    f = keyed(score_queries(index, qdf, top_k=10, parity=False).collect())
+    p = keyed(score_queries(index, qdf, top_k=10, pruned=mode).collect())
+    assert set(f) == set(p)
+    for key in f:
+        assert f[key][0] == p[key][0], (key, f[key], p[key])
+        # f64 summation order differs between the two kernels
+        assert abs(f[key][1] - p[key][1]) < 1e-6
+
+
+def test_blockmax_single_probe_block(spark):
+    """k larger than any single block's candidate count: every block's local
+    top-k is its whole candidate set, and the pruned kernel's threshold never
+    forms inside a block.  Ranks must still equal exhaustive scoring."""
+    corpus = gen_transcripts(90, 15, seed=23, vocab_size=120)
+    cfg = SparseIndexConfig(
+        preprocessor=TextPreprocessorConfig.parity(), block_doc_range=16
+    )
+    index = build_index(spark, spark.createDataFrame(corpus), cfg)
+    qdf = spark.createDataFrame(gen_queries(6, seed=4, vocab_size=120))
+    fast = score_queries(index, qdf, top_k=50, parity=False).collect()
+    pruned = score_queries(index, qdf, top_k=50, pruned=True).collect()
+    f = {(r["query_id"], r["doc_id"]): (r["rank"], float(r["score"])) for r in fast}
+    p = {(r["query_id"], r["doc_id"]): (r["rank"], float(r["score"])) for r in pruned}
+    assert set(f) == set(p)
+    for key in f:
+        assert f[key][0] == p[key][0], (key, f[key], p[key])
+        # f64 summation order differs between the two kernels
+        assert abs(f[key][1] - p[key][1]) < 1e-5
 
 
 def test_pruned_tie_boundary(spark):
